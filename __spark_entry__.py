@@ -272,19 +272,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["fts_regex_infix_group"] = lambda s, d: _engine(s, d).infix_docs(
         "ta(b|c)+le fas"
     )
-    # 7 wildcards: routes through the positional DP (query/infix._dp_docs)
+    # 7 wildcards: routes through the positional DP (query/infix._Evaluator.dp_docs)
     # instead of 2^dots variant enumeration — the round-3 _MAX_DOTS
     # residue, now index-answered
     q["fts_regex_infix_dots"] = lambda s, d: _engine(s, d).infix_docs(
         ".t.bl...c.n."
     )
     # single interior unbounded gap: same-token regex candidates plus the
-    # ordered cross-token positional join (query/infix._gap_docs)
+    # ordered cross-token positional join (query/infix._Evaluator.gap_docs)
     q["fts_regex_infix_gap"] = lambda s, d: _engine(s, d).infix_docs(
         "erge.*fas"
     )
     # three-gap chain: 2^3 merge masks, greedy positional chains
-    # (query/infix.detect_gaps/_gapk_docs)
+    # (query/infix.detect_gaps/_Evaluator.gap_docs)
     q["fts_regex_infix_gap3"] = lambda s, d: _engine(s, d).infix_docs(
         "mer.*tab.*fas.*ow"
     )
@@ -313,7 +313,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     # DOUBLE-flush gaps (spaces on BOTH sides of `.*`/`.+`): a full
     # token must sit between the groups — the two consumed spaces are
-    # distinct chars (query/infix detect_gaps/_gapk_docs step threshold)
+    # distinct chars (query/infix detect_gaps/_gap_cells step threshold)
     q["fts_regex_infix_flushgap"] = lambda s, d: _engine(s, d).infix_docs(
         "data .+ table|able .* sc"
     )
@@ -330,7 +330,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     # flush min-m combos: adjacency needs the INTERMEDIATE token's
     # length — the lg cell anti-joins the short terms' positions
-    # (query/infix._gapk_docs long_at)
+    # (query/infix._Evaluator.long_at)
     q["fts_regex_infix_lggap"] = lambda s, d: _engine(s, d).infix_docs(
         "data .{2,} table|erge.{3,} fas|able .+.+ scan"
     )
@@ -350,7 +350,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "(data |able )+fas|merge( fa)+"
     )
     # INTERIOR unbounded group repetition: corpus-probed finite-ization
-    # (query/infix._make_rep_probe — monotone X^k emptiness bounds k)
+    # (query/infix._Evaluator.rep_kmax — monotone X^k emptiness bounds k)
     q["fts_regex_infix_repgrp"] = lambda s, d: _engine(s, d).infix_docs(
         "me(rge fa)+st|dat(a )+table"
     )

@@ -56,10 +56,19 @@ def brute_force_topk(
     the same guard embedding_neardup_pairs carries. Zero-norm vectors
     score NULL (IEEE NaN), ordered last like the SQL plan's NULLs.
     Returns (query_id, vec_id, cos_sim, rank) with deterministic
-    tie-break (cos desc, vec_id asc); cos rounded half-up to 6 dp."""
+    tie-break (cos desc, vec_id asc); cos rounded half-up to 6 dp.
+    Both id columns must be integral (the GEMM scorer carries ids as
+    int64); any other type raises ValueError before a job runs."""
     import pandas as pd
     from pyspark.sql import Window
+    from pyspark.sql.types import IntegralType
 
+    for df, col in ((vectors, id_col), (queries, qid_col)):
+        if not isinstance(df.schema[col].dataType, IntegralType):
+            raise ValueError(
+                f"brute_force_topk needs an integer id column; {col!r} is "
+                f"{df.schema[col].dataType.simpleString()}"
+            )
     qrows = queries.select(
         F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("qvec")
     ).collect()

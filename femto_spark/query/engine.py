@@ -1161,9 +1161,9 @@ class SearchEngine:
         reference's defining capability (backward search, server.c:713),
         answered from vocab + grams + postings without touching the
         corpus. See query/infix.py for the supported pattern subset."""
-        from .infix import infix_docs as _infix
+        from .infix import SparkPlane, infix_docs as _infix
 
-        return _infix(self, pattern)
+        return _infix(SparkPlane(self), pattern).distinct().orderBy("doc_id")
 
     def infix_limit(
         self, pattern: str, k: int = 10, prefix0: int | None = None
@@ -1183,7 +1183,7 @@ class SearchEngine:
         Raises ValueError exactly when infix_docs would (scan
         fallback); prefix0 forces a small first cap so tests exercise
         the multi-round path."""
-        from .infix import infix_docs as _infix
+        from .infix import SparkPlane, infix_docs as _infix
 
         schema = "doc_id long"
         if k <= 0:
@@ -1194,7 +1194,7 @@ class SearchEngine:
         prev_hi = -1  # docs ≤ prev_hi are fully verified (in acc)
         acc: list = []
         while True:
-            docs = _infix(_CappedView(self, D), pattern)
+            docs = _infix(SparkPlane(_CappedView(self, D)), pattern).distinct()
             if prev_hi >= 0:
                 docs = docs.filter(F.col("doc_id") > prev_hi)
             need = k - len(acc)
@@ -1385,7 +1385,7 @@ class SearchEngine:
 
 class _CappedView:
     """Doc-range-restricted facade over a SearchEngine — exactly the
-    attribute surface the query/infix evaluators touch (spark,
+    attribute surface query/infix.SparkPlane touches (spark,
     index_dir, _vocab, _docs, _positions_for_hashes, _docs_for_hashes),
     with every postings read capped at doc_id ≤ doc_hi: grp partitions
     past the cap never scan and dropped docs' position segments never

@@ -30,7 +30,7 @@ top-level alternation `A|B`, and groups `(A|B)`:
     planes report doc ids, so unanchored search keeps only the
     edge-side repetition: `(X)+R` ≡ `(X)R`, `(X)*R` ≡ `R`); an
     INTERIOR unbounded repetition `A(X)+B` finite-izes through a DATA
-    probe (_make_rep_probe): index-answered emptiness of X^k is
+    probe (_Evaluator.rep_kmax): index-answered emptiness of X^k is
     monotone in k (a stream containing X^{k+1} contains X^k), so the
     corpus itself bounds the repeat count and the quantifier expands
     to the exact branch set `(X){lo}…(X){kmax}` — > _REP_CAP corpus
@@ -45,7 +45,7 @@ rewrite away per branch (streamline(), the reference's
 query_planning.c fix_initial/fix_final analogue; adjacent literal dot
 runs fold into the gap) and INTERIOR gap chains `P0.*P1.*…Pk` up to
 _MAX_GAPS gaps evaluate as token-merge masks decided by greedy
-positional chains (detect_gaps / _gapk_docs). Parts may span MULTIPLE
+positional chains (detect_gaps / _Evaluator.gap_docs). Parts may span MULTIPLE
 tokens — literal spaces split a part into consecutive-token slot
 fragments and in-part dots enumerate space/char choices — so
 phrase-gap-phrase shapes like `merge fast.*table scan` stay on the
@@ -82,23 +82,33 @@ plus the full ERE subset its test templates exercise. Every fragment
 must contain at least one REQUIRED unit (not ?- or *-quantified) so
 token-boundary semantics stay exact.
 
-Plan shape (all DataFrame, no driver-side term lists):
+One evaluator, two planes: _Evaluator holds all of the logic above —
+variant-union slot anchoring, the gap chain with its guard/margin cells
+and per-level frontiers, the positional DP and the interior-repetition
+probe — written against a small plane object of position-set
+primitives (listed in its docstring). SparkPlane implements them as
+lazy DataFrame steps over SearchEngine (or infix_limit's doc-range-
+capped view): a pattern compiles to ONE plan, no collected term
+lists. serving._NumpyPlane implements them in numpy over LocalSearcher's
+demand-paged vocab and one bucket-pruned positions read per candidate
+term set. Plan shape:
 
-  1. '.'-choices are enumerated (space vs in-token char, ≤ 2^dots ≤ 1024
-     variants — patterns carry few dots); each variant splits into
-     per-token fragments: [suffix, full*, prefix].
-  2. each fragment prunes the vocabulary through the char-3-gram table
-     (index/ngram.py) and an rlike verify — candidate TERM SETS stay as
-     DataFrames of term_hash.
-  3. candidates semi-join the index; positions decode once per slot;
-     `anchor = pos − slot` turns the consecutive-token requirement into
-     a plain groupBy(doc_id, anchor) count — the generalized-phrase
-     evaluation, one shuffle, no per-doc Python.
+  1. each branch is streamline()d and routed: gap chains to gap_docs,
+     > _ENUM_DOTS wildcards to the positional DP, the rest to
+     variants() — '.'-choices enumerated (space vs in-token char,
+     ≤ 2^dots), each variant a tuple of per-token fragments
+     [suffix, full*, prefix], i.e. one token-slot group.
+  2. every slot regex prunes the vocabulary through the char-3-gram
+     table (index/ngram.py) and a regex verify — a candidate TERM SET.
+  3. a group's start positions are its slots' position sets shifted by
+     slot offset (`a = pos − off`) and intersected on (doc, a) — the
+     generalized phrase; an unguarded one-slot group needs only the
+     docs plane. Chains, guards and the DP combine start sets with the
+     remaining primitives (filters, anti-joins, per-doc frontiers).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.ngram import prune_terms_by_grams
@@ -106,8 +116,8 @@ from ..index.ngram import prune_terms_by_grams
 _LITERALS = set("abcdefghijklmnopqrstuvwxyz0123456789")
 # ≤ _ENUM_DOTS wildcards: 2^d variant enumeration (simplest plan, the
 # common case). Above it: the O(d²) per-boundary positional DP
-# (_dp_docs) — no wildcard-count limit on the Spark path. _MAX_DOTS only
-# bounds variants() itself (the serving plane still enumerates).
+# (_Evaluator.dp_docs) — no wildcard-count limit. _MAX_DOTS only bounds
+# variants() itself.
 _ENUM_DOTS = 6
 _MAX_DOTS = 10
 _MAX_EXPANSIONS = 64  # cap on branch-expanded pattern count
@@ -531,8 +541,8 @@ def pattern_supported(pattern: str) -> bool:
     chain evaluator, ≤ _ENUM_DOTS wildcards go through variants() (which
     applies the all-optional-fragment rejection), more through the
     positional DP (same rejection, checked per realizable segment by
-    _dp_validate) — there is no wildcard-count rejection on the Spark
-    path anymore, only the structural subset. Interior unbounded group
+    _dp_validate) — there is no wildcard-count rejection, only the
+    structural subset. Interior unbounded group
     repetition is structurally accepted (a stub probe stands in for the
     data probe); at evaluation time the probe can still raise — corpus
     needs > _REP_CAP repeats, or the probed branch set exceeds
@@ -709,7 +719,7 @@ def detect_gaps(pattern: str):
     inter-token space feeds the gap). A doc matches the mask iff its
     stream has group start positions a₀, a₁, … with aᵢ₊₁ ≥ aᵢ + Lᵢ
     (no token sharing beyond the merged cases), decided greedily —
-    earliest feasible start per group (_gapk_docs).
+    earliest feasible start per group (_Evaluator.chain_docs).
 
     Edge-guard exactness (why _MAX_EDGE_GUARD = 4): a head guard of g
     dots requires g stream chars before the group-0 match start. A match
@@ -761,7 +771,7 @@ def detect_gaps(pattern: str):
 
 def _part_slots(frags: tuple[str, ...]):
     """(offset, term-regex, gram-run) per NONEMPTY fragment of one part
-    variant — same anchoring as _slot_regexes (suffix / whole / prefix /
+    variant — anchored by position in the tuple (suffix / whole / prefix /
     lone unanchored; an empty EDGE fragment makes its real neighbor a
     middle-like anchored fragment, e.g. ('a','') → 'a$': the literal
     space after 'a' forces it to the token end). Offsets number the REAL
@@ -941,265 +951,6 @@ def _guard_cells(g: int, flush: bool):
     return None
 
 
-def _gapk_docs(
-    engine,
-    vocab,
-    ngrams,
-    parts: list[str],
-    mins: list[int],
-    head: int = 0,
-    tail: int = 0,
-) -> DataFrame:
-    """Evaluate a gap chain (see detect_gaps): union over (per-part
-    variant choices × 2^k merge masks); each combination's group
-    sequence is decided by a greedy positional chain over the
-    boundary's validity cells (_gap_cells) — per-doc state carries one
-    frontier per needed tail-margin level, and the doc matches iff the
-    chain completes (greedy earliest extension per level is complete
-    for existence of ANY valid chain — margin-k starts nest). A group's
-    START positions come from anchor-joining its slots (token at a+off
-    must match slot regex `off` for every slot) — each distinct slot
-    regex costs one gram-pruned vocab scan + one positions decode, and
-    each distinct slot SET one join tree, shared across combinations.
-
-    Edge guards (what streamline() leaves of a `.+`/`.{m,}` edge)
-    evaluate through _guard_cells — each cell splits the guard chars
-    between in-token dots on the edge slot, whole outside tokens
-    (position / successor-count threshold), and the length of the ONE
-    adjacent token (long_at anti-join); a single group with both
-    guards unions the head × tail cell product (edge_starts)."""
-    from itertools import product
-
-    pvars = _gap_part_variants(parts)
-    if pvars is None:  # detect_gaps validated; defensive
-        raise ValueError(f"unsupported gap parts: {parts!r}")
-
-    def cand(rx: str, run: str):
-        pruned = prune_terms_by_grams(vocab, ngrams, run)
-        base = pruned if pruned is not None else vocab
-        return base.filter(F.col("term").rlike(rx)).select("term_hash")
-
-    pos_cache: dict[str, DataFrame] = {}
-
-    def pos_of(rx: str, run: str) -> DataFrame:
-        # the gram run of a guarded/merged regex is a constituent's run
-        if rx not in pos_cache:
-            pos_cache[rx] = engine._positions_for_hashes(
-                cand(rx, run)
-            ).select("doc_id", "pos")
-        return pos_cache[rx]
-
-    shortpos_cache: dict[tuple, DataFrame] = {}
-
-    def long_at(df: DataFrame, lg: int, delta: int) -> DataFrame:
-        # keep starts a whose token at slot a+delta has length ≥ lg
-        # (gap cells: delta −1, the intermediate token; guard cells:
-        # −1 before the group / +L after it) — anti-join against the
-        # positions of the tiny set of shorter terms (the positions
-        # plane lists every token slot, so absence ⇔ long)
-        key = (lg, delta)
-        if key not in shortpos_cache:
-            c = vocab.filter(F.length("term") < lg).select("term_hash")
-            shortpos_cache[key] = engine._positions_for_hashes(c).select(
-                "doc_id", (F.col("pos") - delta).alias("a")
-            )
-        return df.join(shortpos_cache[key], ["doc_id", "a"], "left_anti")
-
-    start_cache: dict[tuple, DataFrame] = {}
-
-    def starts_of(slots) -> DataFrame:
-        key = tuple((off, rx) for off, rx, _ in slots)
-        if key not in start_cache:
-            df = None
-            for off, rx, run in slots:
-                p = pos_of(rx, run).select(
-                    "doc_id", (F.col("pos") - F.lit(off)).alias("a")
-                )
-                df = p if df is None else df.join(p, ["doc_id", "a"], "leftsemi")
-            start_cache[key] = df
-        return start_cache[key]
-
-    def vslots(slots, hm: int, tm: int):
-        # margin slot variants (levels, _gap_cells): a HEAD margin of k
-        # requires ≥ k chars before the first slot's match inside its
-        # token, a TAIL margin ≥ k chars after the last slot's match.
-        # The _part_slots invariants guarantee the modified side is
-        # unanchored (cells request h > 0 only of non-head-empty
-        # groups, t > 0 only of non-tail-empty ones), so prepending/
-        # appending k dots expresses the margin exactly; the gram run
-        # is unchanged (a margin match contains a plain match).
-        if hm:
-            (o0, rx0, run0) = slots[0]
-            slots = [(o0, "." * hm + rx0, run0)] + list(slots[1:])
-        if tm:
-            (oL, rxL, runL) = slots[-1]
-            slots = list(slots[:-1]) + [(oL, rxL + "." * tm, runL)]
-        return slots
-
-    def cap_tail(df: DataFrame, L: int) -> DataFrame:
-        return (
-            df.join(engine._docs, "doc_id")
-            .filter(F.col("a") <= F.col("dl") - 1 - L)
-            .select("doc_id", "a")
-        )
-
-    def starts_c(group, hm: int = 0, tm: int = 0) -> DataFrame:
-        # boundary-exact edges are REQUIRED constraints: a head-empty
-        # group needs a predecessor token (a ≥ 1), a tail-empty group a
-        # successor token (a + L ≤ dl − 1, the same cap the tail guard
-        # uses)
-        slots, L, hE, tE = group
-        df = starts_of(vslots(slots, hm, tm))
-        if hE:
-            df = df.filter(F.col("a") >= 1)
-        if tE:
-            df = cap_tail(df, L)
-        return df
-
-    def edge_starts(
-        group, hm: int = 0, tm: int = 0, use_head=False, use_tail=False
-    ) -> DataFrame:
-        """Starts of an EDGE group (chain head / tail / single) under
-        the streamline guard runs: the head × tail guard-cell product
-        (_guard_cells), unioned. A cell's j guard dots fold into the
-        edge slot's term regex exactly like a margin level (a guard and
-        a margin never target the same slot side), dist_min becomes a
-        position / successor-count filter, and lg the long-adjacent-
-        token anti-join."""
-        slots, L, hE, tE = group
-        hcells = _guard_cells(head, hE) if (use_head and head) else [(0, 0, 0)]
-        tcells = _guard_cells(tail, tE) if (use_tail and tail) else [(0, 0, 0)]
-        u = None
-        for jh, pmin, lgh in hcells:
-            for jt, smin, lgt in tcells:
-                s = starts_of(vslots(slots, hm + jh, tm + jt))
-                if hE or pmin:
-                    s = s.filter(F.col("a") >= max(1 if hE else 0, pmin))
-                if tE:
-                    s = cap_tail(s, L)
-                if smin:
-                    s = (
-                        s.join(engine._docs, "doc_id")
-                        .filter(F.col("a") <= F.col("dl") - L - smin)
-                        .select("doc_id", "a")
-                    )
-                if lgh:
-                    s = long_at(s, lgh, -1)
-                if lgt:
-                    s = long_at(s, lgt, L)
-                u = s if u is None else u.unionByName(s)
-        return u
-
-    def head_starts(group, tm: int = 0) -> DataFrame:
-        return edge_starts(group, tm=tm, use_head=True)
-
-    def tail_starts(group, hm: int = 0) -> DataFrame:
-        return edge_starts(group, hm=hm, use_tail=True)
-
-    def single_group_docs(group) -> DataFrame:
-        slots, L, hE, tE = group
-        if not head and not tail:
-            if len(slots) == 1 and not hE and not tE:
-                # docs plane suffices: no positions decode
-                _, rx, run = slots[0]
-                return engine._docs_for_hashes(cand(rx, run)).select(
-                    "doc_id"
-                )
-            return starts_c(group).select("doc_id")
-        return edge_starts(group, use_head=True, use_tail=True).select(
-            "doc_id"
-        )
-
-    result: DataFrame | None = None
-    for pvar in product(*pvars):
-        # merge bits are invalid on gaps whose boundary is exact (an
-        # empty edge consumes the inter-token space — the parts cannot
-        # share a token)
-        forbidden = 0
-        for i in range(len(mins)):
-            if pvar[i][-1] == "" or pvar[i + 1][0] == "":
-                forbidden |= 1 << i
-        for mask in range(1 << len(mins)):
-            if mask & forbidden:
-                continue
-            groups, links = _gap_slot_groups(pvar, mins, mask)
-            if len(groups) == 1:
-                d = single_group_docs(groups[0])
-            else:
-                # greedy per-level frontier chain (_gap_cells): state
-                # carries, per needed tail-margin level t, the min
-                # chain-valid start with that margin (column e{t}; a
-                # doc missing the level has null — its cells filter out
-                # via null comparison, the other cells still union in)
-                cells = _gap_cells(groups, links)
-                # frontier levels group i must export = t-levels of its
-                # OUTGOING boundary's cells (always include 0)
-                out_lvls = [
-                    sorted({0} | {t for _, t, _, _ in cells[i]})
-                    for i in range(len(cells))
-                ]
-
-                def agg_min(df: DataFrame, col: str) -> DataFrame:
-                    return df.groupBy("doc_id").agg(
-                        F.min("a").alias(col)
-                    )
-
-                st = agg_min(head_starts(groups[0]), "e0")
-                for t in out_lvls[0]:
-                    if t:
-                        st = st.join(
-                            agg_min(head_starts(groups[0], tm=t), f"e{t}"),
-                            "doc_id",
-                            "left",
-                        )
-                d = None
-                for i in range(1, len(groups)):
-                    g = groups[i]
-                    L = groups[i - 1][1]
-                    last = i == len(groups) - 1
-
-                    def sget(hm=0, tm=0, g=g, last=last):
-                        if last:  # no outgoing gap ⇒ tm never needed
-                            return tail_starts(g, hm=hm)
-                        return starts_c(g, hm=hm, tm=tm)
-
-                    def valid(tm, st=st, L=L, cc=cells[i - 1]):
-                        # union of this boundary's cells, each a
-                        # margin-variant start set under its frontier
-                        # threshold (+ the long-intermediate-token
-                        # filter where the cell carries one)
-                        u = None
-                        for h, t, dm, lg in cc:
-                            p = sget(hm=h, tm=tm)
-                            if lg:
-                                p = long_at(p, lg, -1)
-                            p = (
-                                p.join(st, "doc_id")
-                                .filter(
-                                    F.col("a")
-                                    >= F.col(f"e{t}") + (L + dm)
-                                )
-                                .select("doc_id", "a")
-                            )
-                            u = p if u is None else u.unionByName(p)
-                        return u
-
-                    if last:
-                        d = valid(0).select("doc_id").distinct()
-                    else:
-                        nst = agg_min(valid(0), "e0")
-                        for t in out_lvls[i]:
-                            if t:
-                                nst = nst.join(
-                                    agg_min(valid(t), f"e{t}"),
-                                    "doc_id",
-                                    "left",
-                                )
-                        st = nst
-            result = d if result is None else result.union(d)
-    return result
-
-
 def _dp_boundaries(units: list[tuple[str, str]]) -> list[int]:
     """Indices of boundary-candidate units: literal spaces (forced
     boundaries) and dots (space OR in-token char)."""
@@ -1280,189 +1031,361 @@ def variants(pattern: str) -> list[tuple[str, ...]]:
     return sorted(out)
 
 
-def _slot_regexes(frags: tuple[str, ...]) -> list[tuple[int, str]]:
-    """(slot, term-regex) for each NONEMPTY fragment; the regex anchors
-    by position in the tuple (suffix / whole / prefix / infix)."""
-    k = len(frags) - 1
-    out = []
-    for j, f in enumerate(frags):
-        if f == "":
-            continue
-        if k == 0:
-            rx = f  # single fragment: unanchored infix of one token
-        elif j == 0:
-            rx = f + "$"
-        elif j == k:
-            rx = "^" + f
-        else:
-            rx = "^" + f + "$"
-        out.append((j, rx))
-    return out
+def _margins(slots, hm: int, tm: int):
+    """A slot sequence under margin levels (_gap_cells) or guard dots
+    (_guard_cells): a HEAD margin of k requires ≥ k chars before the
+    first slot's match inside its token, a TAIL margin ≥ k chars after
+    the last slot's match. The _part_slots invariants guarantee the
+    modified side is unanchored (cells request h > 0 only of non-head-
+    empty groups, t > 0 only of non-tail-empty ones), so prepending/
+    appending k dots expresses the margin exactly; the gram run is
+    unchanged (a margin match contains a plain match)."""
+    if hm:
+        (o0, rx0, run0) = slots[0]
+        slots = [(o0, "." * hm + rx0, run0)] + list(slots[1:])
+    if tm:
+        (oL, rxL, runL) = slots[-1]
+        slots = list(slots[:-1]) + [(oL, rxL + "." * tm, runL)]
+    return slots
 
 
-def _dp_docs(engine, pattern: str, vocab, ngrams) -> DataFrame:
-    """Per-boundary positional DP — evaluates a many-wildcard pattern in
-    O(b²) fragment joins instead of 2^dots variant enumeration (the
-    round-3 `_MAX_DOTS` residue; reference answers the same patterns via
-    its NFA walk, src/main/nfa.c:418).
+class SparkPlane:
+    """The DataFrame plane of the infix evaluator (_Evaluator): a term
+    set is a DataFrame (term_hash), a position set (doc_id, a), a doc
+    set (doc_id) and a frontier (doc_id, e). Every primitive is a lazy
+    plan step, so a pattern compiles to ONE plan over the vocab, gram
+    and index tables — no collected term lists, no corpus. `engine`
+    is a SearchEngine or infix_limit's doc-range-capped _CappedView;
+    only spark, index_dir, _vocab, _docs, _positions_for_hashes and
+    _docs_for_hashes are touched."""
 
-    Boundary candidates = literal spaces (forced) and dots (space or
-    in-token char). State S[p] = DataFrame (doc_id, t): SOME choice of
-    the earlier dots matches the pattern prefix up to boundary p (chosen
-    as a space), with token position t the last consumed token. A
-    transition p→q extends by one whole token matching the in-token
-    segment between them (dots inside play chars); the answer joins each
-    state to its prefix-anchored tail. Every 2^dots variant corresponds
-    to exactly one path through the chosen boundaries, so the union of
-    path-endpoints equals the variant-union — same rows, polynomially
-    many fragment evaluations."""
-    units = _dp_validate(pattern)
-    bounds = _dp_boundaries(units)
-    docs_df = engine._docs
+    def __init__(self, engine):
+        from ..index.ngram import ensure_vocab_ngrams
 
-    def positions_of(seg, kind):
-        f = "".join(t for _, t in seg)
-        rx = {"suffix": f + "$", "whole": "^" + f + "$", "prefix": "^" + f}[
-            kind
-        ]
-        run = required_run_from_units(seg)
+        self._e = engine
+        self._vocab = engine._vocab()
+        self._ngrams = ensure_vocab_ngrams(engine.spark, engine.index_dir)
+
+    def terms(self, rx: str, run: str, prefix_anchor: bool, suffix_anchor: bool):
         pruned = prune_terms_by_grams(
-            vocab,
-            ngrams,
+            self._vocab,
+            self._ngrams,
             run,
-            prefix_anchor=kind in ("whole", "prefix") and f.startswith(run),
-            suffix_anchor=kind in ("whole", "suffix") and f.endswith(run),
+            prefix_anchor=prefix_anchor,
+            suffix_anchor=suffix_anchor,
         )
-        base = pruned if pruned is not None else vocab
-        cand = base.filter(F.col("term").rlike(rx)).select("term_hash")
-        return engine._positions_for_hashes(cand).select("doc_id", "pos")
+        base = self._vocab if pruned is None else pruned
+        return base.filter(F.col("term").rlike(rx)).select("term_hash")
 
-    results: list[DataFrame] = []
+    def short_terms(self, n: int):
+        return self._vocab.filter(F.length("term") < n).select("term_hash")
 
-    # no-space variant: the whole pattern inside one token
-    seg_all = _dp_seg(units, None, None)
-    if seg_all:
-        f = "".join(t for _, t in seg_all)
-        run = required_run_from_units(seg_all)
-        pruned = prune_terms_by_grams(vocab, ngrams, run)
-        base = pruned if pruned is not None else vocab
-        cand = base.filter(F.col("term").rlike(f)).select("term_hash")
-        results.append(engine._docs_for_hashes(cand).select("doc_id"))
+    def positions(self, terms):
+        return self._e._positions_for_hashes(terms).select(
+            "doc_id", F.col("pos").alias("a")
+        )
 
-    # S[i]: state after boundary bounds[i]; None = unreachable;
-    # "EMPTY" sentinel = reachable with an empty prefix (pattern starts
-    # at this boundary — the fragment-tuple's empty FIRST fragment,
-    # meaning only "a predecessor token exists": next match needs pos ≥ 1)
-    states: list = [None] * len(bounds)
-    for i, b in enumerate(bounds):
-        # arrive directly from the pattern start
-        seg = _dp_seg(units, None, b)
-        if seg is not None:
-            if not seg:
-                states[i] = "EMPTY"
-            else:
-                states[i] = positions_of(seg, "suffix").select(
-                    "doc_id", F.col("pos").alias("t")
+    def docs(self, terms):
+        return self._e._docs_for_hashes(terms).select("doc_id")
+
+    def shift(self, ps, off: int):
+        return ps.select("doc_id", (F.col("a") - F.lit(off)).alias("a"))
+
+    def semi(self, ps, other):
+        return ps.join(other, ["doc_id", "a"], "leftsemi")
+
+    def anti(self, ps, other):
+        return ps.join(other, ["doc_id", "a"], "left_anti")
+
+    def union(self, x, y):
+        return x.unionByName(y)
+
+    union_docs = union
+
+    def ge(self, ps, lo: int):
+        return ps.filter(F.col("a") >= lo)
+
+    def cap(self, ps, c: int):
+        return (
+            ps.join(self._e._docs, "doc_id")
+            .filter(F.col("a") <= F.col("dl") - 1 - c)
+            .select("doc_id", "a")
+        )
+
+    def first(self, ps):
+        return ps.groupBy("doc_id").agg(F.min("a").alias("e"))
+
+    def after(self, ps, fr, c: int):
+        return (
+            ps.join(fr, "doc_id")
+            .filter(F.col("a") >= F.col("e") + c)
+            .select("doc_id", "a")
+        )
+
+    def doc_ids(self, ps):
+        return ps.select("doc_id")
+
+    def dl_ge(self, n: int):
+        return self._e._docs.filter(F.col("dl") >= n).select("doc_id")
+
+    def no_docs(self):
+        return self._e.spark.createDataFrame([], "doc_id long")
+
+    def nonempty(self, ds) -> bool:
+        return not ds.isEmpty()
+
+
+_EMPTY = object()  # DP state: the pattern starts at this boundary
+
+
+class _Evaluator:
+    """The infix evaluator, written once against a plane of position-set
+    primitives (SparkPlane above; serving's _NumpyPlane):
+
+      terms(rx, run, prefix_anchor, suffix_anchor)  gram-pruned,
+          regex-verified candidate term set; short_terms(n): len < n
+      positions(T) / docs(T)       (doc, pos) set / doc set of a term set
+      shift(P, off)                a → a − off
+      semi / anti(P, Q)            keep / drop P's (doc, a) found in Q
+      union(P, Q), union_docs(D, E)
+      ge(P, lo), cap(P, c)         a ≥ lo / a ≤ dl − 1 − c
+      first(P) → F, after(P, F, c) per-doc min a / keep a ≥ F[doc] + c
+      doc_ids(P), dl_ge(n), no_docs(), nonempty(D)
+
+    Memo tables live for one evaluation (a pattern, its branches and its
+    rep probes): each distinct slot regex costs one candidate lookup +
+    one positions read, each distinct slot set one anchored
+    intersection."""
+
+    def __init__(self, plane):
+        self.p = plane
+        self._pos: dict[str, object] = {}
+        self._anchored: dict[tuple, object] = {}
+        self._short: dict[int, object] = {}
+
+    def terms(self, rx: str, run: str):
+        # anchored grams are lossless only where the required run
+        # touches the regex's anchored edge
+        return self.p.terms(
+            rx,
+            run,
+            bool(run) and rx.startswith("^") and rx[1:].startswith(run),
+            bool(run) and rx.endswith("$") and rx[:-1].endswith(run),
+        )
+
+    def slot_positions(self, rx: str, run: str):
+        if rx not in self._pos:
+            self._pos[rx] = self.p.positions(self.terms(rx, run))
+        return self._pos[rx]
+
+    def union_all(self, ds: list):
+        out = None
+        for d in ds:
+            out = d if out is None else self.p.union_docs(out, d)
+        return self.p.no_docs() if out is None else out
+
+    def long_at(self, ps, lg: int, delta: int):
+        """Keep starts a whose token at slot a+delta has length ≥ lg
+        (gap cells: δ = −1, the intermediate token; guard cells: −1
+        before the group / +L after it) — an anti-join against the
+        positions of the few terms shorter than lg (the positions plane
+        lists every token slot, so absence ⇔ long)."""
+        if lg not in self._short:
+            self._short[lg] = self.p.positions(self.p.short_terms(lg))
+        return self.p.anti(ps, self.p.shift(self._short[lg], delta))
+
+    def anchored(self, slots):
+        """Starts a of a slot sequence: the token at a+off matches slot
+        regex `off` for every slot — the generalized phrase, an
+        intersection of shifted position sets."""
+        key = tuple((off, rx) for off, rx, _ in slots)
+        if key not in self._anchored:
+            ps = None
+            for off, rx, run in slots:
+                s = self.p.shift(self.slot_positions(rx, run), off)
+                ps = s if ps is None else self.p.semi(ps, s)
+            self._anchored[key] = ps
+        return self._anchored[key]
+
+    def starts(self, group, hm: int = 0, tm: int = 0, head: int = 0, tail: int = 0):
+        """Starts of one token-slot group (_gap_slot_groups) under margin
+        levels hm/tm (_gap_cells) and edge-guard runs head/tail: the
+        head × tail guard-cell product (_guard_cells), unioned. A cell's
+        j guard dots fold into the edge slot's regex like a margin (a
+        guard and a margin never target the same slot side). Boundary-
+        exact edges are REQUIRED constraints — a head-empty group needs
+        a predecessor token (a ≥ 1), a tail-empty one a successor
+        (a + L ≤ dl − 1) — and fold with the cells' outside-token
+        counts into one position / successor-count filter per side; lg
+        is the long-adjacent-token anti-join."""
+        slots, L, hE, tE = group
+        p = self.p
+        u = None
+        for jh, pmin, lgh in _guard_cells(head, hE):
+            for jt, smin, lgt in _guard_cells(tail, tE):
+                s = self.anchored(_margins(slots, hm + jh, tm + jt))
+                lo, hi = max(int(hE), pmin), max(int(tE), smin)
+                if lo:
+                    s = p.ge(s, lo)
+                if hi:
+                    s = p.cap(s, L - 1 + hi)
+                if lgh:
+                    s = self.long_at(s, lgh, -1)
+                if lgt:
+                    s = self.long_at(s, lgt, L)
+                u = s if u is None else p.union(u, s)
+        return u
+
+    def group_docs(self, group, head: int = 0, tail: int = 0):
+        slots, L, hE, tE = group
+        if len(slots) == 1 and not (head or tail or hE or tE):
+            # one unguarded token: the docs plane suffices, no positions
+            _, rx, run = slots[0]
+            return self.p.docs(self.terms(rx, run))
+        return self.p.doc_ids(self.starts(group, head=head, tail=tail))
+
+    def chain_docs(self, groups, links, head: int, tail: int):
+        """Greedy per-level frontier chain over ≥ 2 groups: frontier[t]
+        = per-doc min chain-valid start with tail margin ≥ t; the next
+        group's start a' is valid iff SOME boundary cell (h, t, d_min,
+        lg) admits it (_gap_cells) — a' carries head margin h, a' ≥
+        frontier[t] + L + d_min, and the long-token filter where lg > 0.
+        A doc matches iff the last group has a valid start. Greedy
+        earliest extension per level is complete for existence of ANY
+        valid chain (margin-k starts nest)."""
+        p = self.p
+        cells = _gap_cells(groups, links)
+        last = len(groups) - 1
+
+        def group_starts(i: int, hm: int = 0, tm: int = 0):
+            return self.starts(
+                groups[i], hm, tm, head if i == 0 else 0, tail if i == last else 0
+            )
+
+        def levels(i: int) -> list[int]:
+            # tail-margin levels group i's outgoing boundary reads
+            return sorted({0} | {t for _, t, _, _ in cells[i]})
+
+        fr = {t: p.first(group_starts(0, tm=t)) for t in levels(0)}
+        for i in range(1, last + 1):
+            L = groups[i - 1][1]
+
+            def valid(tm: int):
+                u = None
+                for h, t, dm, lg in cells[i - 1]:
+                    s = group_starts(i, hm=h, tm=tm)
+                    if lg:
+                        s = self.long_at(s, lg, -1)
+                    s = p.after(s, fr[t], L + dm)
+                    u = s if u is None else p.union(u, s)
+                return u
+
+            if i == last:
+                return p.doc_ids(valid(0))
+            fr = {t: p.first(valid(t)) for t in levels(i)}
+
+    def gap_docs(self, parts: list[str], mins: list[int], head: int = 0, tail: int = 0):
+        """A gap chain (detect_gaps): the union over per-part variant
+        choices × 2^k merge masks, each mask's group sequence decided by
+        group_docs (one group) or chain_docs. Merge bits are invalid on
+        gaps whose boundary is exact (an empty edge consumes the
+        inter-token space — the parts cannot share a token)."""
+        from itertools import product
+
+        pvars = _gap_part_variants(parts)
+        if pvars is None:  # detect_gaps validated; defensive
+            raise ValueError(f"unsupported gap parts: {parts!r}")
+        out = []
+        for pvar in product(*pvars):
+            forbidden = sum(
+                1 << i
+                for i in range(len(mins))
+                if pvar[i][-1] == "" or pvar[i + 1][0] == ""
+            )
+            for mask in range(1 << len(mins)):
+                if mask & forbidden:
+                    continue
+                groups, links = _gap_slot_groups(pvar, mins, mask)
+                out.append(
+                    self.group_docs(groups[0], head, tail)
+                    if len(groups) == 1
+                    else self.chain_docs(groups, links, head, tail)
                 )
-        # arrive from an earlier boundary
-        for j in range(i):
-            if states[j] is None:
+        return self.union_all(out)
+
+    def dp_docs(self, pattern: str):
+        """Per-boundary positional DP — evaluates a many-wildcard pattern
+        in O(b²) fragment evaluations instead of 2^dots variant
+        enumeration (the reference answers the same patterns via its NFA
+        walk, src/main/nfa.c:418).
+
+        Boundary candidates = literal spaces (forced) and dots (space or
+        in-token char). State S[i] = position set of (doc, t): SOME
+        choice of the earlier dots matches the pattern prefix up to
+        boundary i (chosen as a space), t the last consumed token. A
+        transition extends by one whole token matching the in-token
+        segment between two boundaries (dots inside play chars); the
+        answer joins each state to its prefix-anchored tail. Every
+        variant corresponds to exactly one path through the chosen
+        boundaries, so the union of path endpoints equals the variant
+        union."""
+        p = self.p
+        units = _dp_validate(pattern)
+        bounds = _dp_boundaries(units)
+
+        def seg_positions(seg, pre: str, post: str):
+            f = "".join(t for _, t in seg)
+            return self.slot_positions(pre + f + post, required_run_from_units(seg))
+
+        def advance(state, step):
+            # step's tokens right after the state's last token (_EMPTY:
+            # the pattern starts at a boundary — a predecessor must exist)
+            if state is _EMPTY:
+                return p.ge(step, 1)
+            return p.semi(step, p.shift(state, -1))
+
+        out = []
+        seg = _dp_seg(units, None, None)
+        if seg:  # no-space variant: the whole pattern inside one token
+            f = "".join(t for _, t in seg)
+            out.append(p.docs(self.terms(f, required_run_from_units(seg))))
+        states: list = [None] * len(bounds)
+        for i, b in enumerate(bounds):
+            seg = _dp_seg(units, None, b)
+            if seg is not None:
+                states[i] = seg_positions(seg, "", "$") if seg else _EMPTY
+            # _EMPTY arises only at unit 0, where no earlier boundary
+            # exists, so it never meets a transition below
+            for j in range(i):
+                seg = _dp_seg(units, bounds[j], b)
+                if states[j] is None or not seg:
+                    continue  # unreachable, forced boundary, adjacent spaces
+                nxt = advance(states[j], seg_positions(seg, "^", "$"))
+                states[i] = nxt if states[i] is None else p.union(states[i], nxt)
+            tail = _dp_seg(units, b, None)
+            if states[i] is None or tail is None:
                 continue
-            seg = _dp_seg(units, bounds[j], b)
-            if seg is None or not seg:
-                continue  # forced boundary inside, or adjacent spaces
-            step = positions_of(seg, "whole")
-            if states[j] == "EMPTY":
-                nxt = step.filter(F.col("pos") >= 1).select(
-                    "doc_id", F.col("pos").alias("t")
-                )
-            else:
-                nxt = (
-                    states[j]
-                    .join(
-                        step,
-                        (states[j]["doc_id"] == step["doc_id"])
-                        & (step["pos"] == states[j]["t"] + 1),
-                    )
-                    .select(step["doc_id"], F.col("pos").alias("t"))
-                )
-            if states[i] is None or states[i] == "EMPTY":
-                # an EMPTY marker and a positional state can coexist
-                # (both arrivals are realizable); keep both by unioning
-                # the positional part and remembering EMPTY separately —
-                # EMPTY can only occur for the first boundary at unit 0,
-                # where no earlier boundary exists, so overlap is
-                # impossible in practice
-                states[i] = nxt
-            else:
-                states[i] = states[i].union(nxt)
+            if tail:
+                out.append(p.doc_ids(advance(states[i], seg_positions(tail, "^", ""))))
+            elif states[i] is _EMPTY:
+                # the pattern is one boundary unit: any doc with ≥ 2 tokens
+                out.append(p.dl_ge(2))
+            else:  # empty last fragment: a successor token must exist
+                out.append(p.doc_ids(p.cap(states[i], 1)))
+        return self.union_all(out)
 
-        # finish: tail from this boundary to the pattern end
-        if states[i] is None:
-            continue
-        tail = _dp_seg(units, b, None)
-        if tail is None:
-            continue
-        if not tail:
-            # empty LAST fragment: a successor token must exist
-            if states[i] == "EMPTY":
-                # pattern is a single boundary unit: any doc with ≥ 2
-                # tokens has the space in its stream
-                results.append(
-                    docs_df.filter(F.col("dl") >= 2).select("doc_id")
-                )
-            else:
-                results.append(
-                    states[i]
-                    .join(docs_df, "doc_id")
-                    .filter(F.col("t") + 1 <= F.col("dl") - 1)
-                    .select("doc_id")
-                )
-        else:
-            step = positions_of(tail, "prefix")
-            if states[i] == "EMPTY":
-                results.append(
-                    step.filter(F.col("pos") >= 1).select("doc_id")
-                )
-            else:
-                results.append(
-                    states[i]
-                    .join(
-                        step,
-                        (states[i]["doc_id"] == step["doc_id"])
-                        & (step["pos"] == states[i]["t"] + 1),
-                    )
-                    .select(step["doc_id"])
-                )
-
-    if not results:
-        return engine.spark.createDataFrame([], "doc_id long")
-    out = results[0]
-    for r in results[1:]:
-        out = out.union(r)
-    return out
-
-
-_REP_CAP = 8  # interior-rep probe ascent cap: X^9 still matching → scan
-
-
-def _make_rep_probe(engine, vocab, ngrams):
-    """expand()'s rep_kmax callback for the Spark plane: the largest
-    k ≤ _REP_CAP with ANY doc whose stream contains k consecutive
-    textual repeats of `body`, decided by index-answered emptiness
-    probes of the finite pattern `(body)` × k (each probe is a
-    gram-pruned vocab scan + postings semi-join — never the corpus).
-    Monotone in k, so a linear ascent from max(lo,1) terminates at the
-    first empty k; kmax < lo means no doc can match the quantified
-    branch at all."""
-
-    def rep_kmax(body: str, lo: int) -> int:
+    def rep_kmax(self, body: str, lo: int) -> int:
+        """expand()'s rep_kmax callback: the largest k ≤ _REP_CAP with
+        ANY doc whose stream contains k consecutive textual repeats of
+        `body`, decided by index-answered emptiness probes of the finite
+        pattern `(body)` × k. Monotone in k, so a linear ascent from
+        max(lo, 1) terminates at the first empty k; kmax < lo means no
+        doc can match the quantified branch at all."""
         grp = "(" + body + ")"
 
         def nonempty(k: int) -> bool:
-            pats = expand(grp * k, rep_kmax=rep_kmax)
-            d = _finite_docs(engine, vocab, ngrams, pats)
-            return d is not None and not d.isEmpty()
+            pats = expand(grp * k, rep_kmax=self.rep_kmax)
+            return self.p.nonempty(self.finite_docs(pats))
 
         k = max(lo, 1)
         if not nonempty(k):
@@ -1475,110 +1398,51 @@ def _make_rep_probe(engine, vocab, ngrams):
             f"group repetition exceeds probe cap ({_REP_CAP}): {body!r}"
         )
 
-    return rep_kmax
+    def finite_docs(self, pats: list[str]):
+        """Doc set of already-expanded FINITE patterns (no cross-token
+        groups, no unbounded group repetition) — the body shared by
+        infix_docs and the rep probes. Each branch is streamline()d;
+        gap chains go to gap_docs, many-wildcard branches (> _ENUM_DOTS
+        dots) to the DP — polynomial in dots instead of 2^dots — and the
+        rest enumerate variants(), deduplicated across branches. A
+        variant is one token-slot group (its fragments anchored by
+        position: suffix / whole / prefix, empty edges = required
+        neighbor tokens), evaluated exactly like a one-group gap chain."""
+        out, all_frags = [], set()
+        for pat in pats:
+            pat = streamline(pat)
+            g = detect_gaps(pat) if pat else None
+            if pat == "":
+                out.append(self.p.dl_ge(0))  # a pure edge-gap branch (`.*`)
+            elif g is not None:
+                out.append(self.gap_docs(*g))
+            elif pat.count(".") > _ENUM_DOTS:
+                out.append(self.dp_docs(pat))
+            else:
+                all_frags.update(variants(pat))
+        for frags in sorted(all_frags):
+            if not any(frags):
+                # pure-space variant: any doc with ≥ len(frags) tokens
+                out.append(self.p.dl_ge(len(frags)))
+            else:
+                (group,), _ = _gap_slot_groups([frags], [], 0)
+                out.append(self.group_docs(group))
+        return self.union_all(out)
 
 
-def infix_docs(engine, pattern: str) -> DataFrame:
-    """Sorted distinct doc_ids whose token stream matches `pattern` —
-    answered entirely from the index. See module docstring for the
-    supported subset; engine.scan_docs is the raw-text fallback/oracle."""
-    spark = engine.spark
-    vocab = engine._vocab()
-    from ..index.ngram import ensure_vocab_ngrams
-
-    ngrams = ensure_vocab_ngrams(spark, engine.index_dir)
-
-    pats = expand(pattern, rep_kmax=_make_rep_probe(engine, vocab, ngrams))
-    result = _finite_docs(engine, vocab, ngrams, pats)
-    if result is None:
-        return spark.createDataFrame([], "doc_id long")
-    return result.distinct().orderBy("doc_id")
+_REP_CAP = 8  # interior-rep probe ascent cap: X^9 still matching → scan
 
 
-def _finite_docs(engine, vocab, ngrams, pats: list[str]) -> DataFrame | None:
-    """Union of doc-id sets for a list of already-expanded FINITE
-    patterns (no cross-token groups, no unbounded group repetition) —
-    the body shared by infix_docs and the interior-rep probes. Returns
-    None for an empty union; neither distinct nor ordered."""
-    # each branch is streamlined (edge gaps rewritten away); dedup
-    # shared fragment-tuples so common variants across branches evaluate
-    # once. Gap chains go to the positional chain evaluator; many-
-    # wildcard branches (> _ENUM_DOTS dots) skip enumeration for the
-    # positional DP — polynomial in dots instead of 2^dots
-    all_frags: set[tuple[str, ...]] = set()
-    dp_results: list[DataFrame] = []
-    for p in pats:
-        p = streamline(p)
-        if p == "":
-            # a pure edge-gap branch (`.*`): matches every doc
-            dp_results.append(engine._docs.select("doc_id"))
-            continue
-        g = detect_gaps(p)
-        if g is not None:
-            dp_results.append(_gapk_docs(engine, vocab, ngrams, *g))
-        elif p.count(".") > _ENUM_DOTS:
-            dp_results.append(_dp_docs(engine, p, vocab, ngrams))
-        else:
-            all_frags.update(variants(p))
+def dp_docs(plane, pattern: str):
+    """The positional DP alone (_Evaluator.dp_docs) — the differential
+    tests compare it with the variant enumeration."""
+    return _Evaluator(plane).dp_docs(pattern)
 
-    result: DataFrame | None = None
-    for d in dp_results:
-        result = d if result is None else result.union(d)
-    for frags in sorted(all_frags):
-        k = len(frags) - 1
-        slots = _slot_regexes(frags)
 
-        if not slots:
-            # pure-space variant: any doc with ≥ len(frags) tokens
-            d = engine._docs.filter(F.col("dl") >= len(frags)).select("doc_id")
-            result = d if result is None else result.union(d)
-            continue
-
-        # candidate term sets per slot: gram-pruned, rlike-verified
-        cands = []
-        for j, rx in slots:
-            run = required_run_from_units(_units(frags[j]))
-            pruned = prune_terms_by_grams(
-                vocab,
-                ngrams,
-                run,
-                prefix_anchor=rx.startswith("^") and rx[1:].startswith(run),
-                suffix_anchor=rx.endswith("$") and rx[:-1].endswith(run),
-            )
-            base = pruned if pruned is not None else vocab
-            cand = base.filter(F.col("term").rlike(rx)).select("term_hash")
-            cands.append((j, cand))
-
-        if len(slots) == 1 and k == 0:
-            d = engine._docs_for_hashes(cands[0][1])
-        else:
-            # generalized phrase: anchor = pos − slot aligns consecutive
-            # tokens; a doc matches at anchor a iff every slot is present
-            tagged = None
-            for j, cand in cands:
-                rows = engine._positions_for_hashes(cand).select(
-                    "doc_id",
-                    (F.col("pos") - F.lit(j)).alias("anchor"),
-                    F.lit(j).alias("slot"),
-                )
-                tagged = rows if tagged is None else tagged.union(rows)
-            hits = (
-                tagged.groupBy("doc_id", "anchor")
-                .agg(F.countDistinct("slot").alias("ns"))
-                .filter(F.col("ns") == len(slots))
-            )
-            # empty edge fragments = token-boundary requirements: the
-            # predecessor token sits at stream position `anchor`, which
-            # exists iff anchor >= 0 (symmetric with the trailing check
-            # anchor + k <= dl - 1). A nonempty frags[0] matches as a
-            # token SUFFIX at slot 0, so anchor = pos >= 0 always holds;
-            # the filter is the same either way.
-            hits = hits.filter(F.col("anchor") >= 0)
-            if frags[-1] == "":
-                hits = hits.join(engine._docs, "doc_id").filter(
-                    F.col("anchor") + k <= F.col("dl") - 1
-                )
-            d = hits.select("doc_id")
-        result = d if result is None else result.union(d)
-
-    return result
+def infix_docs(plane, pattern: str):
+    """Doc set (in the plane's form; the DataFrame plane's may repeat
+    ids) of the docs whose token stream matches `pattern` — answered
+    entirely from the index. See the module docstring for the supported
+    subset; SearchEngine.scan_docs is the raw-text fallback/oracle."""
+    ev = _Evaluator(plane)
+    return ev.finite_docs(expand(pattern, rep_kmax=ev.rep_kmax))

@@ -26,7 +26,10 @@ round trips regardless of data size. This module is the serving plane:
 Coverage: count, BM25 search (exact + WAND), fielded where-filters,
 THEN/WITHIN proximity, exact phrase, and index-answered infix/substring
 patterns — every interactive query type the reference's server answers
-(server.c:3604) now runs without a Spark job in the loop.
+(server.c:3604) now runs without a Spark job in the loop. Infix runs
+the one evaluator in query/infix.py (the Spark engine runs the same
+one); this module supplies only its numpy plane of position-set
+primitives, _NumpyPlane, over the demand-paged vocabulary.
 
 At scale the searcher runs behind any stateless HTTP/RPC front; each
 replica holds its own cache, the parquet index is immutable + versioned
@@ -37,11 +40,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from collections import OrderedDict
 
 import numpy as np
 
-from .codec import decode_postings
+from .codec import decode_positions, decode_postings
 from .scoring import B, K1
 from .tokenizer import tokenize
 from .xxhash import xxhash64
@@ -286,11 +290,16 @@ class LocalSearcher:
         # old per-term searchsorted loop — same per-doc add sequence).
         # Dense path: when doc ids index a small array directly, scatter-
         # add by doc_id and skip every sort/binary search; sparse path
-        # (huge doc spaces): one unique(return_inverse) + bincount.
+        # (huge doc spaces, or negative ids — they would wrap through
+        # numpy's negative indexing): one unique(return_inverse) +
+        # bincount. Doc arrays are sorted, so p[0][0] is a term's min id.
         max_doc = max(
             (int(p[0][-1]) for p in alive if p[0].size), default=-1
         ) + 1
-        if 0 < max_doc <= max(1 << 22, 64 * sum(p[0].size for p in alive)):
+        min_doc = min((int(p[0][0]) for p in alive if p[0].size), default=0)
+        if min_doc >= 0 and 0 < max_doc <= max(
+            1 << 22, 64 * sum(p[0].size for p in alive)
+        ):
             accf = np.zeros(max_doc, dtype=np.float64)
             hitf = np.zeros(max_doc, dtype=np.int64)
             for p in alive:  # terms already ascending — same fold order
@@ -643,601 +652,169 @@ class LocalSearcher:
         uniq, counts = np.unique(th, return_counts=True)
         return set(uniq[counts >= len(hashes)].tolist())
 
-    def _positions_map(self, hs: list[int]) -> dict[int, np.ndarray]:
-        """doc → sorted unique token positions where ANY of the candidate
-        term hashes occurs — one bucket-pruned postings+positions read."""
-        import pyarrow.dataset as pads
-
-        from .codec import decode_positions
-
-        if not hs:
-            return {}
-        buckets = sorted({h % self.n_buckets for h in hs})
-        t = self._ix.to_table(
-            columns=["n", "tf_off", "dl_off", "postings", "positions"],
-            filter=pads.field("bucket").isin(buckets)
-            & pads.field("term_hash").isin(hs),
-        )
-        parts: dict[int, list[np.ndarray]] = {}
-        for r in t.to_pylist():
-            if r["positions"] is None:
-                raise ValueError("index was built with with_positions=False")
-            d, tf, _dl = decode_postings(
-                bytes(r["postings"]), r["n"], r["tf_off"], r["dl_off"]
-            )
-            flat, _ = decode_positions(bytes(r["positions"]), tf)
-            plists = np.split(flat, np.cumsum(tf)[:-1])
-            for doc, p in zip(d.tolist(), plists):
-                parts.setdefault(doc, []).append(p)
-        return {doc: np.unique(np.concatenate(ps)) for doc, ps in parts.items()}
-
-    def _doc_dls(self, docs: set[int]) -> dict[int, int]:
-        import pyarrow.dataset as pads
-
-        if not docs:
-            return {}
-        t = self._docs_ds.to_table(
-            columns=["doc_id", "dl"],
-            filter=pads.field("doc_id").isin(list(docs)),
-        )
-        return dict(zip(t["doc_id"].to_pylist(), t["dl"].to_pylist()))
-
-    def _dp_infix_docs(self, pattern: str) -> set[int]:
-        """Serving form of query/infix._dp_docs — the per-boundary
-        positional DP for many-wildcard patterns, evaluated in numpy over
-        pyarrow reads (same states/transitions; see that docstring)."""
-        import re
-
-        import pyarrow.dataset as pads
-
-        from .query.infix import (
-            _dp_boundaries,
-            _dp_seg,
-            _dp_validate,
-            required_run_from_units,
-        )
-
-        units = _dp_validate(pattern)
-        bounds = _dp_boundaries(units)
-
-        def cand_positions(seg, kind) -> dict[int, np.ndarray]:
-            f = "".join(t for _, t in seg)
-            rx = {
-                "suffix": f + "$", "whole": "^" + f + "$", "prefix": "^" + f,
-            }[kind]
-            rxc = re.compile(rx)
-            run = required_run_from_units(seg)
-            rows = self._vocab_matching(
-                rx,
-                rxc.search,
-                run,
-                # anchored grams are only valid when the required run
-                # actually touches the anchored edge (same rule as the
-                # Spark path — otherwise the prune would be lossy)
-                prefix_anchor=kind in ("whole", "prefix")
-                and f.startswith(run),
-                suffix_anchor=kind in ("whole", "suffix")
-                and f.endswith(run),
-            )
-            return self._positions_map([h for _, h in rows])
-
-        result: set[int] = set()
-        seg_all = _dp_seg(units, None, None)
-        if seg_all:
-            f = "".join(t for _, t in seg_all)
-            rxc = re.compile(f)
-            rows = self._vocab_matching(
-                "single:" + f, rxc.search, required_run_from_units(seg_all)
-            )
-            result |= set(self._positions_map([h for _, h in rows]))
-
-        def merge(into, add):
-            for doc, p in add.items():
-                prev = into.get(doc)
-                into[doc] = p if prev is None else np.union1d(prev, p)
-
-        states: list = [None] * len(bounds)
-        for i, b in enumerate(bounds):
-            seg = _dp_seg(units, None, b)
-            if seg is not None:
-                if not seg:
-                    states[i] = "EMPTY"
-                else:
-                    states[i] = cand_positions(seg, "suffix")
-            for j in range(i):
-                if states[j] is None:
-                    continue
-                seg = _dp_seg(units, bounds[j], b)
-                if seg is None or not seg:
-                    continue
-                step = cand_positions(seg, "whole")
-                if states[j] == "EMPTY":
-                    nxt = {
-                        doc: p[p >= 1]
-                        for doc, p in step.items()
-                        if (p >= 1).any()
-                    }
-                else:
-                    nxt = {}
-                    for doc, p in step.items():
-                        prev = states[j].get(doc)
-                        if prev is None:
-                            continue
-                        q = p[np.isin(p - 1, prev)]
-                        if q.size:
-                            nxt[doc] = q
-                if states[i] is None:
-                    states[i] = dict(nxt)
-                elif states[i] == "EMPTY":
-                    # cannot happen (EMPTY only at unit 0, no earlier
-                    # boundary exists); guard for clarity
-                    states[i] = dict(nxt)
-                else:
-                    merge(states[i], nxt)
-
-            if states[i] is None:
-                continue
-            tail = _dp_seg(units, b, None)
-            if tail is None:
-                continue
-            if not tail:
-                if states[i] == "EMPTY":
-                    t = self._docs_ds.to_table(
-                        columns=["doc_id"], filter=pads.field("dl") >= 2
-                    )
-                    result.update(int(d) for d in t["doc_id"].to_pylist())
-                else:
-                    dls = self._doc_dls(set(states[i]))
-                    result.update(
-                        doc
-                        for doc, p in states[i].items()
-                        if (p <= dls.get(doc, 0) - 2).any()
-                    )
-            else:
-                step = cand_positions(tail, "prefix")
-                if states[i] == "EMPTY":
-                    result.update(
-                        doc for doc, p in step.items() if (p >= 1).any()
-                    )
-                else:
-                    for doc, p in step.items():
-                        prev = states[i].get(doc)
-                        if prev is not None and np.isin(p - 1, prev).any():
-                            result.add(doc)
-        return result
-
-    def _gapk_infix_docs(
-        self,
-        parts: list[str],
-        mins: list[int],
-        head: int = 0,
-        tail: int = 0,
-    ) -> set[int]:
-        """Serving form of query/infix._gapk_docs: union over (per-part
-        variant choices × 2^k merge masks), each decided by the greedy
-        two-frontier positional chain (doc matches iff group start
-        positions a₀, a₁, … exist satisfying each boundary's
-        _gap_cells validity cells — per-level margin frontiers — with
-        every slot of each group matching at its offset). Position maps are cached per distinct
-        slot regex and start maps per slot set, shared across
-        combinations. Edge guards (head/tail dot runs ≤ _MAX_EDGE_GUARD,
-        see detect_gaps): a head guard admits group-0 starts ≥ 1 plus
-        starts whose first-slot term matches `.{h}<rx>`; a tail guard
-        admits last-group starts with end token ≤ dl−2 plus starts
-        whose last-slot term matches `<rx>.{t}`; a single group with
-        both guards unions the four (pos-edge × token-edge) cases."""
-        import re
-        from itertools import product
-
-        from .query.infix import (
-            _gap_cells,
-            _gap_part_variants,
-            _gap_slot_groups,
-            _guard_cells,
-        )
-
-        pvars = _gap_part_variants(parts)
-        if pvars is None:  # detect_gaps validated; defensive
-            raise ValueError(f"unsupported gap parts: {parts!r}")
-
-        pmap_cache: dict[str, dict] = {}
-        shortpos_maps: dict[int, dict] = {}
-
-        def smap(lg):
-            # positions of terms SHORTER than lg (a tiny term set; full
-            # vocab stream — short terms carry no 3-gram to prune by)
-            if lg not in shortpos_maps:
-                rows = self._vocab_matching(
-                    f"gap:len<{lg}", lambda t: len(t) < lg, ""
-                )
-                shortpos_maps[lg] = self._positions_map(
-                    [h for _, h in rows]
-                )
-            return shortpos_maps[lg]
-
-        def pmap(rx: str, run: str):
-            if rx not in pmap_cache:
-                rxc = re.compile(rx)
-                rows = self._vocab_matching("gap:" + rx, rxc.search, run)
-                pmap_cache[rx] = self._positions_map([h for _, h in rows])
-            return pmap_cache[rx]
-
-        start_cache: dict[tuple, dict] = {}
-
-        def starts_of(slots):
-            key = tuple((off, rx) for off, rx, _ in slots)
-            if key not in start_cache:
-                m: dict | None = None
-                for off, rx, run in slots:
-                    pm = pmap(rx, run)
-                    if m is None:
-                        m = {doc: p - off for doc, p in pm.items()}
-                    else:
-                        m = {
-                            doc: q
-                            for doc in m.keys() & pm.keys()
-                            if (
-                                q := np.intersect1d(m[doc], pm[doc] - off)
-                            ).size
-                        }
-                start_cache[key] = m or {}
-            return start_cache[key]
-
-        def vslots(slots, hm: int, tm: int):
-            # margin-level variants for flush/min-m gaps — see the
-            # Spark plane (query/infix._gapk_docs vslots, _gap_cells)
-            if hm:
-                (o0, rx0, run0) = slots[0]
-                slots = [(o0, "." * hm + rx0, run0)] + list(slots[1:])
-            if tm:
-                (oL, rxL, runL) = slots[-1]
-                slots = list(slots[:-1]) + [(oL, rxL + "." * tm, runL)]
-            return slots
-
-        def merged(base: dict, extra: dict) -> dict:
-            out = dict(base)
-            for doc, p in extra.items():
-                out[doc] = np.union1d(out[doc], p) if doc in out else p
-            return out
-
-        def pos_ge1(mp: dict) -> dict:
-            return {
-                doc: q for doc, p in mp.items() if (q := p[p >= 1]).size
-            }
-
-        def cap_tail(mp: dict, L: int) -> dict:
-            dls = self._doc_dls(set(mp))
-            return {
-                doc: q
-                for doc, p in mp.items()
-                if (q := p[p <= dls.get(doc, 0) - 1 - L]).size
-            }
-
-        def starts_c(group, hm: int = 0, tm: int = 0):
-            # boundary-exact edges are REQUIRED constraints (see the
-            # Spark plane): head-empty ⇒ a ≥ 1, tail-empty ⇒ successor
-            # token exists
-            slots, L, hE, tE = group
-            m = starts_of(vslots(slots, hm, tm))
-            if hE:
-                m = pos_ge1(m)
-            if tE:
-                m = cap_tail(m, L)
-            return m
-
-        def long_at(mp: dict, lg: int, delta: int) -> dict:
-            # keep starts a whose token at slot a+delta has length
-            # >= lg — see the Spark plane (query/infix long_at)
-            sm = smap(lg)
-            out = {}
-            for doc, p in mp.items():
-                sp = sm.get(doc)
-                q = (
-                    p
-                    if sp is None
-                    else p[np.isin(p + delta, sp, invert=True)]
-                )
-                if q.size:
-                    out[doc] = q
-            return out
-
-        def edge_starts(group, hm=0, tm=0, use_head=False, use_tail=False):
-            """Head x tail guard-cell product (query/infix._guard_cells)
-            — the serving mirror of edge_starts there."""
-            slots, L, hE, tE = group
-            hcells = (
-                _guard_cells(head, hE) if (use_head and head) else [(0, 0, 0)]
-            )
-            tcells = (
-                _guard_cells(tail, tE) if (use_tail and tail) else [(0, 0, 0)]
-            )
-            u: dict = {}
-            for jh, pmin, lgh in hcells:
-                for jt, smin, lgt in tcells:
-                    m = starts_of(vslots(slots, hm + jh, tm + jt))
-                    lo = max(1 if hE else 0, pmin)
-                    if lo:
-                        m = {
-                            doc: q
-                            for doc, p in m.items()
-                            if (q := p[p >= lo]).size
-                        }
-                    if tE:
-                        m = cap_tail(m, L)
-                    if smin:
-                        dls = self._doc_dls(set(m))
-                        m = {
-                            doc: q
-                            for doc, p in m.items()
-                            if (
-                                q := p[p <= dls.get(doc, 0) - L - smin]
-                            ).size
-                        }
-                    if lgh:
-                        m = long_at(m, lgh, -1)
-                    if lgt:
-                        m = long_at(m, lgt, L)
-                    u = merged(u, m)
-            return u
-
-        def head_starts(group, tm: int = 0):
-            return edge_starts(group, tm=tm, use_head=True)
-
-        def tail_starts(group, hm: int = 0):
-            return edge_starts(group, hm=hm, use_tail=True)
-
-        def single_docs(group) -> set[int]:
-            if not head and not tail:
-                return set(starts_c(group))
-            return set(edge_starts(group, use_head=True, use_tail=True))
-
-        result: set[int] = set()
-        for pvar in product(*pvars):
-            forbidden = 0
-            for i in range(len(mins)):
-                if pvar[i][-1] == "" or pvar[i + 1][0] == "":
-                    forbidden |= 1 << i
-            for mask in range(1 << len(mins)):
-                if mask & forbidden:
-                    continue
-                groups, links = _gap_slot_groups(pvar, mins, mask)
-                if len(groups) == 1:
-                    result |= single_docs(groups[0])
-                    continue
-                # greedy per-level frontier chain — the serving form of
-                # query/infix._gapk_docs: per doc, fr[t] = min
-                # chain-valid start with tail margin >= t (inf when
-                # absent), boundary validity cells per _gap_cells
-                cells = _gap_cells(groups, links)
-                out_lvls = [
-                    sorted({0} | {t for _, t, _, _ in cells[i]})
-                    for i in range(len(cells))
-                ]
-                n_g = len(groups)
-
-                def sget(i, hm=0, tm=0):
-                    if i == 0:  # group 0 has no incoming gap => no hm
-                        return head_starts(groups[0], tm=tm)
-                    if i == n_g - 1:  # no outgoing gap => no tm
-                        return tail_starts(groups[-1], hm=hm)
-                    return starts_c(groups[i], hm=hm, tm=tm)
-
-                maps = [sget(i) for i in range(n_g)]
-                common = set(maps[0])
-                for mp in maps[1:]:
-                    common &= mp.keys()
-                _INF = float("inf")
-                mvar_cache: dict[tuple, dict] = {}
-
-                def mmap(i, hm, tm):
-                    key = (i, hm, tm)
-                    if key not in mvar_cache:
-                        mvar_cache[key] = sget(i, hm=hm, tm=tm)
-                    return mvar_cache[key]
-
-                def mmin(i, hm, tm, doc, lo, lg=0):
-                    q = mmap(i, hm, tm).get(doc)
-                    if q is None:
-                        return _INF
-                    q = q[q >= lo]
-                    if lg and q.size:
-                        # long-intermediate filter (_gap_cells lg): the
-                        # token at a'−1 must be ≥ lg chars — drop a'
-                        # whose predecessor slot is a short term
-                        sp = smap(lg).get(doc)
-                        if sp is not None:
-                            q = q[np.isin(q - 1, sp, invert=True)]
-                    return int(q.min()) if q.size else _INF
-
-                for doc in common - result:
-                    fr = {0: int(maps[0][doc].min())}
-                    for t in out_lvls[0]:
-                        if t:
-                            fr[t] = mmin(0, 0, t, doc, 0)
-                    ok = True
-                    for i in range(1, n_g):
-                        L = groups[i - 1][1]
-                        lvls = out_lvls[i] if i < n_g - 1 else [0]
-                        nfr = {}
-                        for tm in lvls:
-                            best = _INF
-                            for h, t, dm, lg in cells[i - 1]:
-                                lo = fr.get(t, _INF) + L + dm
-                                if lo != _INF:
-                                    best = min(
-                                        best,
-                                        mmin(i, h, tm, doc, lo, lg),
-                                    )
-                            nfr[tm] = best
-                        if nfr[0] == _INF:
-                            ok = False
-                            break
-                        fr = nfr
-                    if ok:
-                        result.add(doc)
-        return result
-
     def infix_docs(self, pattern: str) -> list[int]:
         """Sorted doc_ids whose token stream matches `pattern` — the
-        serving form of query/infix.infix_docs, same supported subset
-        (module docstring there): variant-union / slot-anchor for few
-        wildcards, the positional DP (_dp_infix_docs) past _ENUM_DOTS,
-        single unbounded gaps via _gap_infix_docs — evaluated in numpy
-        over pyarrow reads. Interior unbounded group repetition
-        finite-izes through the same emptiness-probe contract as the
-        Spark plane (query/infix._make_rep_probe), probing with this
-        plane's own evaluator."""
-        from .query.infix import _REP_CAP, expand
+        evaluator of query/infix.infix_docs (same supported subset, same
+        plans: variant union, gap chains, positional DP, rep probes)
+        over this searcher's numpy plane, _NumpyPlane."""
+        from .query.infix import infix_docs
 
-        def rep_kmax(body: str, lo: int) -> int:
-            grp = "(" + body + ")"
+        return infix_docs(_NumpyPlane(self), pattern).tolist()
 
-            def nonempty(k: int) -> bool:
-                return bool(
-                    self._finite_infix_docs(expand(grp * k, rep_kmax=rep_kmax))
-                )
 
-            k = max(lo, 1)
-            if not nonempty(k):
-                return k - 1
-            while k < _REP_CAP:
-                if not nonempty(k + 1):
-                    return k
-                k += 1
-            raise ValueError(
-                f"group repetition exceeds probe cap ({_REP_CAP}): {body!r}"
-            )
+_NONE = np.empty(0, dtype=np.int64)
+_BIAS = 1 << 31  # a = pos − off may be negative: pair keys pack a + _BIAS
 
-        return sorted(
-            self._finite_infix_docs(expand(pattern, rep_kmax=rep_kmax))
+
+def _firsts(d: np.ndarray) -> np.ndarray:
+    """Mask of the first row of each run of equal values in sorted d."""
+    m = np.ones(d.size, dtype=bool)
+    m[1:] = d[1:] != d[:-1]
+    return m
+
+
+def _in_pairs(x, y) -> np.ndarray:
+    """Mask of position set x's (doc, a) pairs that also occur in y. Both
+    sides key a pair as (rank of doc among x's docs) << 32 | a + _BIAS,
+    so any int64 doc id packs; y's docs outside x are dropped first."""
+    (xd, xa), (yd, ya) = x, y
+    docs = xd[_firsts(xd)]
+    r = np.searchsorted(docs, yd)
+    ok = r < docs.size
+    ok[ok] = docs[r[ok]] == yd[ok]
+    ky = (r[ok] << 32) | (ya[ok] + _BIAS)
+    kx = (np.searchsorted(docs, xd) << 32) | (xa + _BIAS)
+    return np.isin(kx, ky)
+
+
+class _NumpyPlane:
+    """LocalSearcher's plane of the infix evaluator (query/infix
+    _Evaluator): a term set is an int64 hash array, a position set a
+    (doc, a) pair of int64 arrays sorted by (doc, a), a doc set a sorted
+    unique int64 array, a frontier (doc, min a). Term sets come from the
+    demand-paged vocab (_vocab_matching); a term set's positions or docs
+    are ONE bucket-pruned multi-term read; every other primitive is a
+    vectorized numpy step — no per-doc Python."""
+
+    def __init__(self, searcher: LocalSearcher):
+        self.s = searcher
+
+    def terms(self, rx: str, run: str, prefix_anchor: bool, suffix_anchor: bool):
+        rows = self.s._vocab_matching(
+            rx, re.compile(rx).search, run, prefix_anchor, suffix_anchor
         )
+        return np.array([h for _, h in rows], dtype=np.int64)
 
-    def _finite_infix_docs(self, pats: list[str]) -> set[int]:
-        """Doc-id set for a list of already-expanded finite patterns —
-        the evaluator shared by infix_docs and its interior-rep probes."""
-        import re
+    def short_terms(self, n: int):
+        # too short to gram-prune: the vocab streams, the matches stay
+        rows = self.s._vocab_matching(f"len<{n}", lambda t: len(t) < n, "")
+        return np.array([h for _, h in rows], dtype=np.int64)
 
+    def _rows(self, hs: np.ndarray, cols: list[str]) -> list[dict]:
         import pyarrow.dataset as pads
 
-        from .query.infix import (
-            _ENUM_DOTS,
-            _slot_regexes,
-            _units,
-            detect_gaps,
-            required_run_from_units,
-            streamline,
-            variants,
+        if not hs.size:
+            return []
+        hl = hs.tolist()
+        t = self.s._ix.to_table(
+            columns=cols,
+            filter=pads.field("bucket").isin(
+                sorted({h % self.s.n_buckets for h in hl})
+            )
+            & pads.field("term_hash").isin(hl),
         )
+        return t.to_pylist()
 
-        all_frags: set[tuple[str, ...]] = set()
-        dp_result: set[int] = set()
-        for p in pats:
-            p = streamline(p)
-            if p == "":
-                # a pure edge-gap branch (`.*`): matches every doc
-                t = self._docs_ds.to_table(columns=["doc_id"])
-                dp_result.update(int(d) for d in t["doc_id"].to_pylist())
-                continue
-            g = detect_gaps(p)
-            if g is not None:
-                dp_result |= self._gapk_infix_docs(*g)
-            elif p.count(".") > _ENUM_DOTS:
-                dp_result |= self._dp_infix_docs(p)
-            else:
-                all_frags.update(variants(p))
+    def positions(self, hs):
+        docs, poss = [_NONE], [_NONE]
+        for r in self._rows(hs, ["n", "tf_off", "dl_off", "postings", "positions"]):
+            if r["positions"] is None:
+                raise ValueError("index was built with with_positions=False")
+            d, tf, _ = decode_postings(
+                bytes(r["postings"]), r["n"], r["tf_off"], r["dl_off"]
+            )
+            docs.append(np.repeat(d, tf))
+            poss.append(decode_positions(bytes(r["positions"]), tf)[0])
+        d, a = np.concatenate(docs), np.concatenate(poss)
+        o = np.lexsort((a, d))
+        return d[o], a[o]
 
-        result: set[int] = set()
-        for frags in sorted(all_frags):
-            k = len(frags) - 1
-            slots = _slot_regexes(frags)
+    def docs(self, hs):
+        docs = [_NONE]
+        for r in self._rows(hs, ["n", "tf_off", "dl_off", "postings"]):
+            d, _, _ = decode_postings(
+                bytes(r["postings"]), r["n"], r["tf_off"], r["dl_off"]
+            )
+            docs.append(d)
+        return np.unique(np.concatenate(docs))
 
-            if not slots:
-                t = self._docs_ds.to_table(
-                    columns=["doc_id"], filter=pads.field("dl") >= len(frags)
-                )
-                result.update(int(d) for d in t["doc_id"].to_pylist())
-                continue
+    def shift(self, ps, off: int):
+        return ps[0], ps[1] - off
 
-            # candidate term hashes per slot: gram-pruned, regex-verified
-            cands: list[tuple[int, list[int]]] = []
-            for j, rx in slots:
-                run = required_run_from_units(_units(frags[j]))
-                rxc = re.compile(rx)
-                hs = [
-                    h
-                    for _, h in self._vocab_matching(
-                        rx,
-                        rxc.search,
-                        run,
-                        prefix_anchor=rx.startswith("^")
-                        and rx[1:].startswith(run),
-                        suffix_anchor=rx.endswith("$")
-                        and rx[:-1].endswith(run),
-                    )
-                ]
-                cands.append((j, hs))
-            if any(not hs for _, hs in cands):
-                continue  # some slot unsatisfiable → this variant is empty
+    def semi(self, ps, other):
+        m = _in_pairs(ps, other)
+        return ps[0][m], ps[1][m]
 
-            if len(slots) == 1 and k == 0:
-                j, hs = cands[0]
-                buckets = sorted({h % self.n_buckets for h in hs})
-                t = self._ix.to_table(
-                    columns=["n", "tf_off", "dl_off", "postings"],
-                    filter=pads.field("bucket").isin(buckets)
-                    & pads.field("term_hash").isin(hs),
-                )
-                for r in t.to_pylist():
-                    d, _tf, _dl = decode_postings(
-                        bytes(r["postings"]), r["n"], r["tf_off"], r["dl_off"]
-                    )
-                    result.update(d.tolist())
-                continue
+    def anti(self, ps, other):
+        m = ~_in_pairs(ps, other)
+        return ps[0][m], ps[1][m]
 
-            # generalized phrase: per-slot doc → anchor arrays, intersected
-            slot_maps: list[dict[int, np.ndarray]] = []
-            doc_dl: dict[int, int] = {}
-            for j, hs in cands:
-                buckets = sorted({h % self.n_buckets for h in hs})
-                t = self._ix.to_table(
-                    columns=["n", "tf_off", "dl_off", "postings", "positions"],
-                    filter=pads.field("bucket").isin(buckets)
-                    & pads.field("term_hash").isin(hs),
-                )
-                parts: dict[int, list[np.ndarray]] = {}
-                from .codec import decode_positions
+    def union(self, x, y):
+        d, a = np.concatenate((x[0], y[0])), np.concatenate((x[1], y[1]))
+        o = np.lexsort((a, d))
+        d, a = d[o], a[o]
+        m = _firsts(d)
+        m[1:] |= a[1:] != a[:-1]
+        return d[m], a[m]
 
-                for r in t.to_pylist():
-                    if r["positions"] is None:
-                        raise ValueError(
-                            "index was built with with_positions=False"
-                        )
-                    d, tf, dl = decode_postings(
-                        bytes(r["postings"]), r["n"], r["tf_off"], r["dl_off"]
-                    )
-                    flat, _ = decode_positions(bytes(r["positions"]), tf)
-                    plists = np.split(flat, np.cumsum(tf)[:-1])
-                    for doc, dlen, p in zip(d.tolist(), dl.tolist(), plists):
-                        parts.setdefault(doc, []).append(p - j)
-                        doc_dl[doc] = dlen
-                slot_maps.append(
-                    {
-                        doc: np.unique(np.concatenate(ps))
-                        for doc, ps in parts.items()
-                    }
-                )
-            docs = set(slot_maps[0])
-            for m in slot_maps[1:]:
-                docs &= set(m)
-            for doc in docs:
-                anchors = slot_maps[0][doc]
-                for m in slot_maps[1:]:
-                    anchors = np.intersect1d(anchors, m[doc])
-                    if anchors.size == 0:
-                        break
-                anchors = anchors[anchors >= 0]
-                if frags[-1] == "":
-                    anchors = anchors[anchors + k <= doc_dl[doc] - 1]
-                if anchors.size:
-                    result.add(int(doc))
-        return result | dp_result
+    def union_docs(self, x, y):
+        return np.union1d(x, y)
+
+    def ge(self, ps, lo: int):
+        m = ps[1] >= lo
+        return ps[0][m], ps[1][m]
+
+    def cap(self, ps, c: int):
+        import pyarrow.dataset as pads
+
+        d, a = ps
+        docs = d[_firsts(d)]
+        t = self.s._docs_ds.to_table(
+            columns=["doc_id", "dl"],
+            filter=pads.field("doc_id").isin(docs.tolist()),
+        )
+        td = np.asarray(t["doc_id"].to_numpy(), dtype=np.int64)
+        tl = np.asarray(t["dl"].to_numpy(), dtype=np.int64)
+        dl = np.zeros(docs.size, dtype=np.int64)  # absent doc: no tokens
+        dl[np.searchsorted(docs, td)] = tl
+        m = a <= dl[np.searchsorted(docs, d)] - 1 - c
+        return d[m], a[m]
+
+    def first(self, ps):
+        m = _firsts(ps[0])  # sorted by (doc, a): a doc's first a is its min
+        return ps[0][m], ps[1][m]
+
+    def after(self, ps, fr, c: int):
+        (d, a), (fd, fe) = ps, fr
+        i = np.searchsorted(fd, d)
+        ok = i < fd.size
+        ok[ok] = fd[i[ok]] == d[ok]
+        ok[ok] = a[ok] >= fe[i[ok]] + c
+        return d[ok], a[ok]
+
+    def doc_ids(self, ps):
+        return ps[0][_firsts(ps[0])]
+
+    def dl_ge(self, n: int):
+        import pyarrow.dataset as pads
+
+        t = self.s._docs_ds.to_table(
+            columns=["doc_id"], filter=pads.field("dl") >= n
+        )
+        return np.unique(np.asarray(t["doc_id"].to_numpy(), dtype=np.int64))
+
+    def no_docs(self):
+        return _NONE
+
+    def nonempty(self, ds) -> bool:
+        return ds.size > 0

@@ -378,7 +378,7 @@ def main() -> int:
 
     # 14. plan-compile probe for a MAXIMAL accepted gap pattern (ADVICE
     # r05 #3): 4 gaps, multi-token parts with in-part dots (variant
-    # fan-out), edge guards — the worst _gapk_docs plan (up to 16 merge
+    # fan-out), edge guards — the worst _Evaluator.gap_docs plan (up to 16 merge
     # masks × variant combos with margin/guard sub-unions). The property
     # asserted is that driver-side planning (analysis+optimization+
     # physical planning, via the explain string) completes in bounded

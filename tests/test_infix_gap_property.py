@@ -1,8 +1,10 @@
 """Property test for the gap-chain evaluator: for EVERY pattern the
 grammar accepts (gap chains with guards, multi-token parts, boundary-
-exact edges, in-part dots — the round-5 machinery), the serving plane's
-infix_docs must equal Python `re.search` over the space-joined token
-streams. Patterns the engine rejects (ValueError → scan fallback) are
+exact edges, in-part dots), infix_docs must equal Python `re.search`
+over the space-joined token streams — on both planes of the one
+query/infix evaluator (the serving plane at full strength, the Spark
+plane on a smaller deterministic sample: each Spark pattern runs
+jobs). Patterns the engine rejects (ValueError → scan fallback) are
 skipped, mirroring tests/test_infix_expand_property.py; anything
 accepted is checked exactly. The corpus is adversarial by construction:
 very short tokens and docs so position-0 / last-token / single-token-doc
@@ -41,8 +43,9 @@ def _mk_docs():
 
 
 @pytest.fixture(scope="module")
-def searcher_streams(spark, tmp_path_factory):
+def planes_streams(spark, tmp_path_factory):
     from femto_spark.index import build_index
+    from femto_spark.query import SearchEngine
     from femto_spark.serving import LocalSearcher
     from femto_spark.tokenizer import tokenize
 
@@ -51,7 +54,12 @@ def searcher_streams(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("gapprop") / "ix")
     build_index(spark, corpus, out, n_buckets=2)
     streams = {d: " ".join(tokenize(t)) for d, t in docs}
-    return LocalSearcher(out), streams
+    eng = SearchEngine(spark, out)
+    planes = {
+        "serving": LocalSearcher(out).infix_docs,
+        "spark": lambda p: [r["doc_id"] for r in eng.infix_docs(p).collect()],
+    }
+    return planes, streams
 
 
 def _parts(draw):
@@ -76,13 +84,25 @@ _PATTERNS = st.builds(
 )
 
 
-@settings(max_examples=250, deadline=None)
-@given(pat=_PATTERNS)
-def test_gap_chain_matches_re(searcher_streams, pat):
-    searcher, streams = searcher_streams
-    try:
-        got = searcher.infix_docs(pat)
-    except ValueError:
-        return  # documented scan fallback — out of scope here
-    want = sorted(d for d, s in streams.items() if re.search(pat, s))
-    assert got == want, (pat, got[:20], want[:20])
+_SETTINGS = {
+    "serving": settings(max_examples=250, deadline=None),
+    "spark": settings(max_examples=20, deadline=None, derandomize=True),
+}
+
+
+@pytest.mark.parametrize("plane", ["serving", "spark"])
+def test_gap_chain_matches_re(planes_streams, plane):
+    planes, streams = planes_streams
+    infix_docs = planes[plane]
+
+    @_SETTINGS[plane]
+    @given(pat=_PATTERNS)
+    def check(pat):
+        try:
+            got = infix_docs(pat)
+        except ValueError:
+            return  # documented scan fallback — out of scope here
+        want = sorted(d for d, s in streams.items() if re.search(pat, s))
+        assert got == want, (plane, pat, got[:20], want[:20])
+
+    check()

@@ -137,6 +137,20 @@ def test_simhash_deterministic_and_dup_zero_distance(spark, docs):
                 assert pairs.get((a, b)) == 0
 
 
+def test_brute_force_topk_rejects_non_integer_ids(spark, embs):
+    from femto_spark.ops.similarity import brute_force_topk
+
+    qdf = embs.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    str_ids = embs.withColumn("vec_id", F.col("vec_id").cast("string"))
+    with pytest.raises(ValueError, match="'vec_id' is string"):
+        brute_force_topk(str_ids, qdf, k=5)
+    str_q = qdf.withColumn("query_id", F.col("query_id").cast("string"))
+    with pytest.raises(ValueError, match="'query_id' is string"):
+        brute_force_topk(embs, str_q, k=5)
+
+
 def test_brute_force_topk_vs_numpy(spark, embs):
     from femto_spark.ops.similarity import brute_force_topk
 

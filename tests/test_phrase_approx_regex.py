@@ -200,7 +200,7 @@ def test_infix_docs_matches_token_stream_regex(spark, engine, docs_sf001):
         "(a b)+", "(the )+fa", "(a |the ){1,}of", "ta(b le)*",
         "(da|ta) (ba se)+", "(a b)?(s t)+", "(x y)*",
         # INTERIOR unbounded group repetition: corpus-probed
-        # finite-ization (_make_rep_probe — monotone X^k emptiness)
+        # finite-ization (_Evaluator.rep_kmax — monotone X^k emptiness)
         "me(rge fa)+st", "dat(a )*table", "s(can ){1,}fast",
         "dat(a b)+cd", "x(y z)+w", "d(ata tab)+le",
         "me(rge fa|ta da)+st", "a(b c)*d",
@@ -238,11 +238,8 @@ def test_infix_dp_equals_enumeration(spark, engine, docs_sf001):
     """Differential: for patterns the enumeration path handles, the DP
     must produce identical doc sets (same variant semantics, different
     plan)."""
-    from femto_spark.index.ngram import ensure_vocab_ngrams
-    from femto_spark.query.infix import _dp_docs
+    from femto_spark.query.infix import SparkPlane, dp_docs
 
-    vocab = engine._vocab()
-    ngrams = ensure_vocab_ngrams(spark, engine.index_dir)
     for pat in [
         "erge.fas", "ta.le", "a.a", ".able", "able ", " ta.le",
         "scan.fa[rst]t", "s[cl]an fas", "mer+ge", "e.g. .as",
@@ -251,7 +248,7 @@ def test_infix_dp_equals_enumeration(spark, engine, docs_sf001):
         dp = sorted(
             {
                 r["doc_id"]
-                for r in _dp_docs(engine, pat, vocab, ngrams).collect()
+                for r in dp_docs(SparkPlane(engine), pat).collect()
             }
         )
         assert dp == enum, pat

@@ -78,6 +78,32 @@ def test_fielded_where_filter(spark, tmp_path, docs_sf001, oracle_sf001):
     assert got == want
 
 
+def test_search_negative_doc_ids(spark, tmp_path):
+    """Negative doc_ids must score under their own ids: the dense fold
+    indexes an array by doc_id, where a negative id would wrap through
+    numpy's negative indexing onto another doc's slot."""
+    from femto_spark.index import build_index
+    from femto_spark.query import SearchEngine
+    from femto_spark.serving import LocalSearcher
+
+    docs = [
+        (-7, "data table scan"), (-3, "data data merge"), (-1, "table fast"),
+        (0, "data slow"), (2, "merge table data table"), (6, "scan data"),
+    ]
+    corpus = spark.createDataFrame(docs, "doc_id long, text string")
+    out = str(tmp_path / "negix")
+    build_index(spark, corpus, out, n_buckets=2)
+    s, eng = LocalSearcher(out), SearchEngine(spark, out)
+    for q in ["data", "data table", "table merge scan", "fast slow data"]:
+        for mode in ("or", "and"):
+            exp = [
+                (r["doc_id"], r["score"])
+                for r in eng.search(q, k=10, mode=mode).collect()
+            ]
+            assert exp or mode == "and", q
+            assert s.search(q, k=10, mode=mode) == exp, (q, mode)
+
+
 def test_proximity_matches_engine(searcher, engine):
     """THEN/WITHIN served locally must equal the Spark engine exactly."""
     cases = [
@@ -119,10 +145,18 @@ def test_positions_plane_latency(searcher):
     assert per < 0.01, f"warm positions query took {per * 1e3:.1f} ms"
 
 
-def test_infix_matches_engine(searcher, engine):
+def test_infix_matches_engine(searcher, engine, docs_sf001):
     """Serving-plane infix must equal the Spark engine's index-answered
     path across the full supported subset (classes, quantifiers,
-    boundaries, alternation/groups)."""
+    boundaries, alternation/groups) — and, since both planes run the one
+    query/infix evaluator, each must also equal Python `re.search` over
+    every doc's space-joined token stream (a plane-vs-plane check alone
+    cannot catch a bug in the shared core)."""
+    import re
+
+    from femto_spark.tokenizer import tokenize
+
+    streams = {d: " ".join(tokenize(t)) for d, t in docs_sf001.items()}
     pats = [
         "erge.fas", "erge fas", "merge", "a.a", "s[cl]an", "mer+ge",
         " able", ".able", " able ", "able ", "e ",
@@ -157,14 +191,16 @@ def test_infix_matches_engine(searcher, engine):
         "(a(b|c))d", "s(c(a|b)n|low)", "me(r(ge|ta) fa)st",
         # edge-unbounded group repetition (rewritten away)
         "(the )+fa", "ta(b le)*", "(a b)+",
-        # interior unbounded group repetition (corpus-probed, both
-        # planes run the same _make_rep_probe contract)
+        # interior unbounded group repetition (corpus-probed through
+        # the evaluator's rep_kmax emptiness probes)
         "me(rge fa)+st", "dat(a )*table", "s(can ){1,}fast",
     ]
     for pat in pats:
+        want = sorted(d for d, s in streams.items() if re.search(pat, s))
         got = searcher.infix_docs(pat)
         exp = [r["doc_id"] for r in engine.infix_docs(pat).collect()]
-        assert got == exp, pat
+        assert got == want, ("serving", pat)
+        assert exp == want, ("spark", pat)
 
 
 def test_vocab_demand_paged(index_dir, engine):
