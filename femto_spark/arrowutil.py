@@ -1,10 +1,13 @@
 """Arrow-stream helpers shared by build stages and vectorized operators.
 
-`stream_groups` is the workhorse: process a repartitioned,
-sortWithinPartitions stream with mapInPandas and cut group boundaries in
-numpy — one Python/Arrow round-trip per PARTITION instead of
+A repartitioned, sortWithinPartitions stream processed with mapInPandas
+costs one Python/Arrow round-trip per PARTITION instead of
 applyInPandas' per-GROUP exchange (which dominates when groups are small
-and numerous: vocab×salt groups in the build, per-doc groups in MinHash).
+and numerous). `whole_group_batches` is the one place that cuts such a
+stream into whole groups, carrying a group split across Arrow batches
+into the next batch: the index merge consumes its batches whole (one
+vectorized pass per batch), `stream_groups` calls a function per group
+(the block-pair GEMM in embedding_neardup_pairs).
 """
 
 from __future__ import annotations
@@ -13,12 +16,13 @@ import numpy as np
 import pandas as pd
 
 
-def stream_groups(batches, key_cols: list[str], process):
-    """Yield process(group_pdf) for each contiguous group of `key_cols` in
-    a sorted batch stream, carrying partial groups across Arrow batches."""
+def whole_group_batches(batches, key_cols: list[str]):
+    """Yield (pdf, starts) from a batch stream sorted by `key_cols`: pdf
+    holds only whole groups (a trailing group is carried into the next
+    batch) and `starts` are the row offsets where its groups begin."""
     carry: pd.DataFrame | None = None
     for pdf in batches:
-        if carry is not None and len(carry):
+        if carry is not None:
             pdf = pd.concat([carry, pdf], ignore_index=True)
             carry = None
         n = len(pdf)
@@ -28,26 +32,22 @@ def stream_groups(batches, key_cols: list[str], process):
         for c in key_cols:
             v = pdf[c].to_numpy()
             change[1:] |= v[1:] != v[:-1]
-        starts = np.flatnonzero(np.concatenate(([True], change[1:])))
-        last = starts[-1]
+        change[0] = True
+        starts = np.flatnonzero(change)
+        last = int(starts[-1])
         carry = pdf.iloc[last:]
-        for i in range(len(starts) - 1):
-            out = process(pdf.iloc[starts[i] : starts[i + 1]])
+        if last:
+            yield pdf.iloc[:last], starts[:-1]
+    if carry is not None:
+        yield carry, np.zeros(1, dtype=np.int64)
+
+
+def stream_groups(batches, key_cols: list[str], process):
+    """Yield process(group_pdf) for each contiguous group of `key_cols` in
+    a sorted batch stream, carrying partial groups across Arrow batches."""
+    for pdf, starts in whole_group_batches(batches, key_cols):
+        bounds = np.append(starts, len(pdf))
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            out = process(pdf.iloc[lo:hi])
             if out is not None:
                 yield out
-    if carry is not None and len(carry):
-        out = process(carry)
-        if out is not None:
-            yield out
-
-
-def batched_rows(row_iter, batch_rows: int = 256):
-    """Collect small per-group result dicts into DataFrame batches."""
-    buf: list[dict] = []
-    for rows in row_iter:
-        buf.extend(rows if isinstance(rows, list) else [rows])
-        if len(buf) >= batch_rows:
-            yield pd.DataFrame(buf)
-            buf = []
-    if buf:
-        yield pd.DataFrame(buf)

@@ -14,8 +14,11 @@ lifting MAP-SIDE and *no strings in the hot path*:
            (term_hash, doc-range grp) per batch            [PARTIALS ✓ ckpt]
       │  the only posting shuffle moves compressed runs, keyed by BUCKET
       ▼  (bucket = pmod(term_hash, n_buckets)), sorted (term_hash, grp)
-  stage 2  mapInPandas stream: k-way merge each (term_hash, grp)'s runs →
-           ≤ shard_size rows with block-max metadata; written directly
+  stage 2  mapInPandas stream, one vectorized pass per Arrow batch of
+           whole (term_hash, grp) groups: decode every run at once,
+           lexsort postings by (group, doc) — the k-way merge — and
+           re-encode ≤ shard_size-posting rows with block-max metadata
+           through the stage-1 encoder; written directly
            partitionBy(bucket) — the merge shuffle IS the final layout,
            blobs move exactly once                          [INDEX]
       ▼
@@ -67,13 +70,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec import (
-    decode_positions,
-    decode_postings,
-    encode_hit_segments,
-    encode_positions_flat,
-    encode_postings,
-)
+from ..arrowutil import whole_group_batches
+from ..codec import decode_positions, encode_hit_segments, varint_decode
 from ..tokenizer import spark_tokens_expr
 
 # bump when the on-disk layout changes; readers refuse older layouts
@@ -111,28 +109,6 @@ MERGED_SCHEMA = T.StructType(
     ]
     + _POSTING_FIELDS
 )
-
-
-def _posting_row(term_hash: int, doc_ids, tfs, dls, pos_blob):
-    blob, meta = encode_postings(doc_ids, tfs, dls)
-    return {
-        "term_hash": int(term_hash),
-        "n": meta["n"],
-        "cf": int(tfs.sum()),
-        "tf_off": meta["tf_off"],
-        "dl_off": meta["dl_off"],
-        "block_last_doc": meta["block_last_doc"].tolist(),
-        "block_max_tf": meta["block_max_tf"].tolist(),
-        "block_min_dl": meta["block_min_dl"].tolist(),
-        "block_gap_off": meta["block_gap_off"].tolist(),
-        "block_tf_off": meta["block_tf_off"].tolist(),
-        "block_dl_off": meta["block_dl_off"].tolist(),
-        "postings": blob,
-        "positions": pos_blob,
-    }
-
-
-from ..arrowutil import batched_rows as _batched  # shared Arrow-stream helper
 
 
 # ---------------------------------------------------------------------------
@@ -187,72 +163,71 @@ def _make_encode_mapside(range_shift: int, with_positions: bool = True):
 # ---------------------------------------------------------------------------
 
 
-from ..arrowutil import stream_groups as _stream_groups  # noqa: E402
+def _merge_batch(
+    pdf: pd.DataFrame, starts: np.ndarray, shard_size: int, n_buckets: int
+) -> pd.DataFrame:
+    """Merge every (term_hash, grp) group of one batch of whole groups
+    (group rows begin at `starts`) in one vectorized pass: decode all run
+    blobs at once, order the postings by (group, doc) — the runs of a
+    group hold disjoint doc sets, so this is the k-way merge — cut each
+    group into ≤ shard_size postings per shard and re-encode every
+    (term_hash, grp, shard) segment through codec.encode_hit_segments,
+    the stage-1 encoder."""
+    n = pdf["n"].to_numpy(np.int64)
+    row = np.repeat(np.arange(n.size), n)
+    row_start = np.cumsum(n) - n
+    # a run blob holds n doc gaps, then n tfs, then n dls
+    gap_at = 2 * row_start[row] + np.arange(row.size)
+    vals = varint_decode(
+        np.frombuffer(b"".join(pdf["postings"]), dtype=np.uint8)
+    ).astype(np.int64)
+    tf = vals[gap_at + n[row]]
+    dl = vals[gap_at + 2 * n[row]]
+    # gap cumsum restarting at each run; int64 wraps exactly as the
+    # encoder's uint64 gaps do, so negative doc ids round-trip
+    csum = np.cumsum(vals[gap_at])
+    doc = csum - np.concatenate(([0], csum))[row_start][row]
+
+    is_start = np.zeros(n.size, dtype=np.int64)
+    is_start[starts[1:]] = 1
+    gid = np.cumsum(is_start)[row]
+    order = np.lexsort((doc, gid))
+    size = np.bincount(gid)
+    rank = np.arange(order.size) - (np.cumsum(size) - size)[gid[order]]
+    tf_o = tf[order]
+    hit = np.repeat(order, tf_o)  # each output hit's posting, input order
+
+    pos_blob = b"".join(p or b"" for p in pdf["positions"])
+    pos_s = None
+    if pos_blob:
+        flat, pos_start = decode_positions(pos_blob, tf)
+        within = np.arange(hit.size) - np.repeat(np.cumsum(tf_o) - tf_o, tf_o)
+        pos_s = flat[pos_start[hit] + within]
+    rows = encode_hit_segments(
+        pdf["term_hash"].to_numpy(np.int64)[row[hit]],
+        pdf["grp"].to_numpy(np.int64)[row[hit]],
+        doc[hit],
+        dl[hit],
+        pos_s,
+        with_positions=pos_s is not None,
+        shard_s=np.repeat(rank // shard_size, tf_o),
+    )
+    out = pd.DataFrame(rows)
+    out["bucket"] = np.mod(out["term_hash"].to_numpy(np.int64), n_buckets)
+    return out
 
 
-def _make_merge_stream(shard_size: int, n_buckets: int):
+def _make_batch_merge(shard_size: int, n_buckets: int):
     """mapInPandas over a bucket-partitioned, (term_hash, grp)-sorted
-    stream of partial runs: k-way merge each (term_hash, grp) group's runs
-    (disjoint doc sets from different source batches) and emit sharded
-    final rows. Task input is bounded by the grp doc-range — no whole-term
-    task ever exists. Output is already bucket-aligned, so the writer
-    needs no further shuffle."""
-
-    def _merge(pdf: pd.DataFrame):
-        th = int(pdf["term_hash"].iloc[0])
-        runs = []
-        for r in pdf.itertuples(index=False):
-            d, t, l = decode_postings(bytes(r.postings), r.n, r.tf_off, r.dl_off)
-            pblob = bytes(r.positions) if r.positions is not None else b""
-            if pblob:
-                pflat, _ = decode_positions(pblob, t)
-            else:
-                pflat = np.empty(0, dtype=np.int64)
-            runs.append((d, t, l, pflat))
-        doc = np.concatenate([r[0] for r in runs])
-        tfs = np.concatenate([r[1] for r in runs])
-        dls = np.concatenate([r[2] for r in runs])
-        # runs hold disjoint doc sets → stable argsort = k-way merge
-        order = np.argsort(doc, kind="stable")
-        # permute the flat position segments into merged order (vectorized)
-        flat = np.concatenate([r[3] for r in runs])
-        has_positions = flat.size > 0
-        run_offsets = np.cumsum([0] + [r[3].size for r in runs])[:-1]
-        within = np.concatenate(
-            [np.cumsum(r[1]) - r[1] for r in runs]
-        ) + np.repeat(run_offsets, [r[0].size for r in runs])
-        doc, tfs, dls = doc[order], tfs[order], dls[order]
-        src_starts = within[order]
-        lens = tfs
-        total = int(lens.sum())
-        if has_positions:
-            out_idx = np.repeat(src_starts, lens) + (
-                np.arange(total) - np.repeat(np.cumsum(lens) - lens, lens)
-            )
-            flat_sorted = flat[out_idx]
-        else:
-            flat_sorted = flat
-
-        bucket = th % n_buckets  # == Spark pmod for positive n_buckets
-        grp = int(pdf["grp"].iloc[0])
-        rows = []
-        pos_bounds = np.concatenate(([0], np.cumsum(lens)))
-        for shard, lo in enumerate(range(0, doc.size, shard_size)):
-            hi = min(lo + shard_size, doc.size)
-            pb = (
-                encode_positions_flat(
-                    flat_sorted[pos_bounds[lo] : pos_bounds[hi]], lens[lo:hi]
-                )
-                if has_positions
-                else b""
-            )
-            row = _posting_row(th, doc[lo:hi], tfs[lo:hi], dls[lo:hi], pb)
-            row.update({"bucket": bucket, "grp": grp, "shard": shard})
-            rows.append(row)
-        return rows
+    stream of partial runs: merge each Arrow batch's whole groups in one
+    `_merge_batch` pass (a group split across batches is carried to the
+    next one) and emit sharded final rows. Task input is bounded by the
+    grp doc-range — no whole-term task ever exists. Output is already
+    bucket-aligned, so the writer needs no further shuffle."""
 
     def _stream(batches):
-        yield from _batched(_stream_groups(batches, ["term_hash", "grp"], _merge))
+        for pdf, starts in whole_group_batches(batches, ["term_hash", "grp"]):
+            yield _merge_batch(pdf, starts, shard_size, n_buckets)
 
     return _stream
 
@@ -835,7 +810,7 @@ def build_index(
             .repartition(n_merge, "_steer")
             .sortWithinPartitions("term_hash", "grp")
             .drop("_steer")
-            .mapInPandas(_make_merge_stream(shard_size, n_buckets), MERGED_SCHEMA)
+            .mapInPandas(_make_batch_merge(shard_size, n_buckets), MERGED_SCHEMA)
         )
         # output partitions are bucket-aligned → direct partitioned write,
         # exactly one blob shuffle in the whole build

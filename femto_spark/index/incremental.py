@@ -16,7 +16,9 @@ redesign:
     3. re-run the merge + termstats stages over the unioned partials.
 
 The merge stage is insensitive to how many runs a (term_hash, grp)
-group has or which segment they came from: it k-way-merges *runs*. Result is
+group has or which segment they came from: it orders all of a group's
+postings by doc id in one lexsort per Arrow batch (runs hold disjoint
+docs, so that is the k-way merge) and re-encodes them. Result is
 bit-identical to a one-shot build over the union corpus
 (tests/test_incremental.py) — BM25's global df/N/avgdl are exact, not
 approximated, because term stats are recomputed from the merged index.

@@ -32,6 +32,28 @@ def cosine_expr(a: str, b: str) -> str:
     return _COS.format(a=a, b=b)
 
 
+def _round_cos(cos: np.ndarray, ma: np.ndarray, mb: np.ndarray) -> np.ndarray:
+    """Round a BLAS cosine matrix (cos[i, j] of rows ma[i], mb[j]) to
+    floor(cos·1e6+0.5)/1e6, bit-identical to the SQL form's strict
+    left-fold (`_COS`). The GEMM sums in another order, so an entry may
+    differ from the fold by the rounding error of its d-term sums: at most
+    about 4·d·2^-53 in cosine, i.e. 4.4e-10·d rounding units (one unit =
+    1e-6 of cosine). Entries within max(1e-6, d·1e-9) units of a rounding
+    boundary are recomputed with the fold (np.cumsum) first — a margin of
+    ≥2× over that bound at any dimension d. Non-finite entries (zero-norm
+    vectors) pass through."""
+    x = cos * 1e6 + 0.5
+    with np.errstate(invalid="ignore"):
+        near = np.abs(x - np.rint(x)) < max(1e-6, ma.shape[1] * 1e-9)
+    for i, j in zip(*np.nonzero(near)):
+        dot = float(np.cumsum(ma[i] * mb[j])[-1])
+        nna = math.sqrt(float(np.cumsum(ma[i] * ma[i])[-1]))
+        nnb = math.sqrt(float(np.cumsum(mb[j] * mb[j])[-1]))
+        if nna * nnb != 0.0:
+            cos[i, j] = dot / (nna * nnb)
+    return np.floor(cos * 1e6 + 0.5) / 1e6
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -51,10 +73,10 @@ def brute_force_topk(
     ~10× the BLAS cost (guide §4.2 — hand whole batches to native code).
 
     Output is bit-identical to the per-pair SQL fold: near-boundary
-    entries (|cos·1e6+0.5 − nearest int| < 1e-6; BLAS drift bound ~1e-8)
-    are recomputed with the canonical strict left-fold before rounding —
-    the same guard embedding_neardup_pairs carries. Zero-norm vectors
-    score NULL (IEEE NaN), ordered last like the SQL plan's NULLs.
+    entries are recomputed with the canonical strict left-fold before
+    rounding (`_round_cos`, shared with embedding_neardup_pairs).
+    Zero-norm vectors score NULL (IEEE NaN), ordered last like the SQL
+    plan's NULLs.
     Returns (query_id, vec_id, cos_sim, rank) with deterministic
     tie-break (cos desc, vec_id asc); cos rounded half-up to 6 dp.
     Both id columns must be integral (the GEMM scorer carries ids as
@@ -103,18 +125,7 @@ def brute_force_topk(
                 ma = np.array(list(pdf["v"]), dtype=np.float64)
                 na = np.sqrt((ma * ma).sum(axis=1))
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (ma @ qm.T) / np.outer(na, qn)
-                # boundary guard (see docstring): canonical left-fold
-                x = cos * 1e6 + 0.5
-                with np.errstate(invalid="ignore"):
-                    sus = np.abs(x - np.rint(x)) < 1e-6
-                for i, j in zip(*np.nonzero(sus)):
-                    dot = float(np.cumsum(ma[i] * qm[j])[-1])
-                    nna = math.sqrt(float(np.cumsum(ma[i] * ma[i])[-1]))
-                    nnb = math.sqrt(float(np.cumsum(qm[j] * qm[j])[-1]))
-                    if nna * nnb != 0.0:
-                        cos[i, j] = dot / (nna * nnb)
-                cos = np.floor(cos * 1e6 + 0.5) / 1e6
+                    cos = _round_cos((ma @ qm.T) / np.outer(na, qn), ma, qm)
                 cos[~np.isfinite(cos)] = np.nan
                 if cos.shape[0] > k:
                     # per-batch prune to k per query ((cos desc, id asc);
@@ -344,13 +355,12 @@ def embedding_neardup_pairs(
 
     Determinism: fixed block assignment (xxhash64), float64 GEMM, same
     floor(·×1e6+0.5) rounding as the SQL forms. BLAS reduction order
-    differs from the engine's canonical strict left-fold by ~1 ulp; any
-    entry whose unrounded value lands within 1e-6 rounding-units of a
-    floor boundary (drift bound ≈ 1e-8 units, so the margin is ~100×)
-    is recomputed with an exact sequential fold (np.cumsum) before
-    rounding — the rounded output is therefore bit-identical to the
-    sequential-fold SQL form at ANY scale, not just where rounding
-    happens to absorb the drift.
+    differs from the engine's canonical strict left-fold by a few ulps;
+    any entry whose unrounded value lands near a floor boundary is
+    recomputed with an exact sequential fold (`_round_cos` states the
+    bound and margin) before rounding — the rounded output is therefore
+    bit-identical to the sequential-fold SQL form at ANY scale and
+    dimension, not just where rounding happens to absorb the drift.
     """
     import pandas as pd
 
@@ -387,17 +397,7 @@ def embedding_neardup_pairs(
         mb = ma if same else np.array(list(gb["v"]), dtype=np.float64)
         na = np.sqrt((ma * ma).sum(axis=1))
         nb = na if same else np.sqrt((mb * mb).sum(axis=1))
-        cos = (ma @ mb.T) / np.outer(na, nb)
-        # boundary guard (see docstring): recompute near-boundary entries
-        # with the canonical strict left-fold before rounding
-        x = cos * 1e6 + 0.5
-        sus_r, sus_c = np.nonzero(np.abs(x - np.rint(x)) < 1e-6)
-        for i, j in zip(sus_r.tolist(), sus_c.tolist()):
-            dot = float(np.cumsum(ma[i] * mb[j])[-1])
-            nna = math.sqrt(float(np.cumsum(ma[i] * ma[i])[-1]))
-            nnb = math.sqrt(float(np.cumsum(mb[j] * mb[j])[-1]))
-            cos[i, j] = dot / (nna * nnb)
-        cos = np.floor(cos * 1e6 + 0.5) / 1e6
+        cos = _round_cos((ma @ mb.T) / np.outer(na, nb), ma, mb)
         if same:
             # strict upper triangle by id (ids within a block are unique)
             keep = (ia[:, None] < ib[None, :]) & (cos >= tau)

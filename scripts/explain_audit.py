@@ -19,6 +19,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -29,9 +30,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _op_num(p: str, name: str) -> int:
     """Position of an operator in the numbered bottom-up plan listing —
     (1) is the scan; smaller = earlier in execution."""
-    import re as _re
-
-    m = _re.search(r"\((\d+)\) [^\n]*" + name, p)
+    m = re.search(r"\((\d+)\) [^\n]*" + name, p)
     return int(m.group(1)) if m else 10**9
 
 
@@ -258,7 +257,7 @@ def main() -> int:
     # bucket into k cluster-scaling slices — NOT the old 16-task
     # repartition(n_buckets), and NOT a range exchange (whose sampling
     # job executed the full partials scan just to learn boundaries)
-    from femto_spark.index.build import MERGED_SCHEMA, _make_merge_stream
+    from femto_spark.index.build import MERGED_SCHEMA, _make_batch_merge
     from femto_spark.index.steering import steering_values
     from pyspark.sql import functions as FF
 
@@ -279,7 +278,7 @@ def main() -> int:
         .repartition(n_merge, "_steer")
         .sortWithinPartitions("term_hash", "grp")
         .drop("_steer")
-        .mapInPandas(_make_merge_stream(1 << 18, n_bk), MERGED_SCHEMA)
+        .mapInPandas(_make_batch_merge(1 << 18, n_bk), MERGED_SCHEMA)
     )
     check(
         "index merge stage — parallelism beyond n_buckets",
@@ -293,6 +292,11 @@ def main() -> int:
             (
                 f"merge task count = {n_merge} (> n_buckets)",
                 lambda p: merged_plan_df.rdd.getNumPartitions() == n_merge,
+            ),
+            (
+                "one blob shuffle: a single Exchange, below the merge UDF",
+                lambda p: len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1
+                and _op_num(p, "Exchange") < _op_num(p, "MapInPandas"),
             ),
         ],
     )

@@ -16,6 +16,31 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def index_signature(spark):
+    """index_signature(out) → every row of `out`/index on every
+    MERGED_SCHEMA column (blobs as md5), sorted — the byte-identity check
+    between builds that must agree, skip metadata (block_*, cf, tf_off,
+    dl_off) included."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BinaryType
+
+    from femto_spark.index.build import MERGED_SCHEMA
+
+    cols = [
+        F.md5(f.name).alias(f.name) if isinstance(f.dataType, BinaryType) else f.name
+        for f in MERGED_SCHEMA
+    ]
+
+    def _sig(out):
+        rows = spark.read.parquet(os.path.join(out, "index")).select(*cols).collect()
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows
+        )
+
+    return _sig
+
+
+@pytest.fixture(scope="session")
 def docs_sf001():
     """The driver-provided documents table at sf0.001 as {doc_id: text}."""
     import duckdb

@@ -1,7 +1,9 @@
-"""encode_hit_segments must byte-match the single-list encoder per segment
-(property-based over random sorted hit streams)."""
+"""encode_hit_segments — and the build's stage-2 merge, which re-encodes
+through it — must byte-match the single-list encoders per segment
+(property-based over random sorted hit streams and random partial runs)."""
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -12,13 +14,16 @@ from femto_spark.codec import (
 )
 
 
-def _reference_rows(h_s, grp_s, doc_s, dl_s, pos_s, with_positions=True):
-    """Naive per-segment encode via the single-list functions."""
+def _reference_rows(h_s, grp_s, doc_s, dl_s, pos_s, with_positions=True, shard_s=None):
+    """Naive per-segment encode via the single-list functions; segments
+    are (h, grp) runs, or (h, grp, shard) runs when shard_s is given."""
     rows = []
     total = doc_s.size
     seg_change = np.empty(total, dtype=bool)
     seg_change[0] = True
     seg_change[1:] = (h_s[1:] != h_s[:-1]) | (grp_s[1:] != grp_s[:-1])
+    if shard_s is not None:
+        seg_change[1:] |= shard_s[1:] != shard_s[:-1]
     seg_starts = np.flatnonzero(seg_change)
     seg_ends = np.append(seg_starts[1:], total)
     for lo, hi in zip(seg_starts, seg_ends):
@@ -44,12 +49,19 @@ def _reference_rows(h_s, grp_s, doc_s, dl_s, pos_s, with_positions=True):
                 "positions": pb,
             }
         )
+        if shard_s is not None:
+            rows[-1]["shard"] = int(shard_s[lo])
     return rows
 
 
 def _norm(row):
     return {
-        k: (list(map(int, v)) if isinstance(v, list) else v) for k, v in row.items()
+        k: (
+            list(map(int, v))
+            if isinstance(v, (list, np.ndarray))
+            else v if isinstance(v, bytes) else int(v)
+        )
+        for k, v in row.items()
     }
 
 
@@ -103,3 +115,73 @@ def test_segments_no_positions():
 def test_segments_empty():
     e = np.empty(0, dtype=np.int64)
     assert encode_hit_segments(e, e, e, e, e) == []
+
+
+# term hashes span the int64 range, doc ids go negative
+_HASHES = [-(1 << 63), -977, 0, 5, 1 << 40, (1 << 63) - 1]
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=len(_HASHES) - 1),  # term
+            st.integers(min_value=-60, max_value=60),  # doc id
+            st.integers(min_value=1, max_value=4),  # tf
+        ),
+        min_size=20,
+        max_size=150,
+    ),
+    st.sampled_from([3, 6, 20]),  # range_shift
+    st.integers(min_value=1, max_value=4),  # source runs
+    st.sampled_from([1, 2, 3, 1 << 18]),  # shard_size
+    st.booleans(),  # with_positions
+    st.integers(min_value=1, max_value=4),  # partial rows per Arrow batch
+    st.randoms(use_true_random=False),
+)
+@settings(max_examples=60, deadline=None)
+def test_batch_merge_matches_reference(
+    hits, shift, n_runs, shard_size, with_positions, batch_rows, rnd
+):
+    """Stage 2 (`_make_batch_merge`) over partial runs as stage 1 writes
+    them — several runs per (term, grp), groups split across Arrow
+    batches, runs of a group in any order — equals a per-(term, grp,
+    shard) encode_postings + encode_positions_flat of the whole stream."""
+    from femto_spark.index.build import _make_batch_merge
+
+    expanded, seen = [], set()
+    for t, d, tf in hits:
+        if (t, d) not in seen:
+            seen.add((t, d))
+            expanded += [(_HASHES[t], d, 3 * i + d % 2) for i in range(tf)]
+    expanded.sort()
+    h_s, doc_s, pos_s = (np.array(c, dtype=np.int64) for c in zip(*expanded))
+    grp_s = doc_s >> shift
+    dl_s = doc_s % 37 + 12
+    # stage 1: one run per (term, grp) per source batch of docs
+    runs = []
+    for k in range(n_runs):
+        m = doc_s % n_runs == k
+        if m.any():
+            runs += encode_hit_segments(
+                h_s[m], grp_s[m], doc_s[m], dl_s[m], pos_s[m], with_positions
+            )
+    rnd.shuffle(runs)
+    runs.sort(key=lambda r: (r["term_hash"], r["grp"]))
+    partials = pd.DataFrame(runs)
+    batches = [
+        partials.iloc[i : i + batch_rows] for i in range(0, len(partials), batch_rows)
+    ]
+    got = pd.concat(list(_make_batch_merge(shard_size, 7)(iter(batches))))
+
+    # reference: shard = rank of the doc within its (term, grp) // shard_size
+    docs_of, shard_s = {}, []
+    for h, g, d in zip(h_s.tolist(), grp_s.tolist(), doc_s.tolist()):
+        docs = docs_of.setdefault((h, g), [])
+        if not docs or docs[-1] != d:
+            docs.append(d)
+        shard_s.append((len(docs) - 1) // shard_size)
+    shard_s = np.array(shard_s)
+    want = _reference_rows(h_s, grp_s, doc_s, dl_s, pos_s, with_positions, shard_s)
+    for r in want:
+        r["bucket"] = r["term_hash"] % 7
+    assert [_norm(r) for r in got.to_dict("records")] == [_norm(r) for r in want]

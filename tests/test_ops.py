@@ -179,6 +179,34 @@ def test_brute_force_topk_vs_numpy(spark, embs):
             (rk, vid) for rk, vid, _ in sorted(by_q[q])
         ] == [(rk, vid) for rk, vid, _ in want]
 
+    # d ≥ 1024 (the boundary guard's threshold grows with d): every score
+    # equals the SQL form's strict left-fold, rounded, bit for bit
+    import math
+
+    d, n = 1536, 40
+    big = np.random.default_rng(7).standard_normal((n, d)).astype(np.float32)
+    big[1] = big[0] + np.float32(0.01) * big[1]  # a near-duplicate pair
+    vdf = spark.createDataFrame(
+        [(i, big[i].tolist()) for i in range(n)], "vec_id long, embedding array<float>"
+    )
+    qd = vdf.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = brute_force_topk(vdf, qd, k=n).collect()
+    assert len(got) == 2 * n
+
+    def fold(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s += x * y
+        return s
+
+    v64 = big.astype(np.float64).tolist()
+    for r in got:
+        a, b = v64[r["query_id"]], v64[r["vec_id"]]
+        c = fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+        assert r["cos_sim"] == math.floor(c * 1e6 + 0.5) / 1e6, (r["query_id"], r["vec_id"])
+
 
 def test_lsh_topk_self_hit(spark, embs):
     from femto_spark.ops.similarity import lsh_bucket_topk

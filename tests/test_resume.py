@@ -8,22 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 
-def _index_signature(spark, out):
-    ix = spark.read.parquet(os.path.join(out, "index"))
-    rows = ix.select(
-        "term_hash",
-        "grp",
-        "shard",
-        "n",
-        F.md5(F.col("postings")).alias("ph"),
-        F.md5(F.col("positions")).alias("xh"),
-    ).collect()
-    return sorted(
-        (r["term_hash"], r["grp"], r["shard"], r["n"], r["ph"], r["xh"]) for r in rows
-    )
-
-
-def test_kill_and_rerun_equals_oneshot(spark, tmp_path):
+def test_kill_and_rerun_equals_oneshot(spark, tmp_path, index_signature):
     from femto_spark.index import build_index
 
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -49,7 +34,7 @@ def test_kill_and_rerun_equals_oneshot(spark, tmp_path):
     assert "partials" not in report["stages"]
     assert "index" in report["stages"]
 
-    assert _index_signature(spark, a) == _index_signature(spark, b)
+    assert index_signature(a) == index_signature(b)
 
 
 def test_full_resume_noop(spark, tmp_path, index_dir):
@@ -75,7 +60,7 @@ def test_manifest_lineage_metrics(spark, index_dir):
     assert total == ix.agg(F.sum("n")).collect()[0][0]
 
 
-def test_partitioning_invariance(spark, tmp_path):
+def test_partitioning_invariance(spark, tmp_path, index_signature):
     """The map-side run encoding + range-group merge must be a pure
     optimization: identical index content regardless of input partitioning
     or parallelism (SURVEY §7.2 M3 criterion — the successor of the
@@ -87,7 +72,7 @@ def test_partitioning_invariance(spark, tmp_path):
     b = str(tmp_path / "p16")
     build_index(spark, corpus.repartition(2), a, n_buckets=8, n_partitions=2)
     build_index(spark, corpus.repartition(16), b, n_buckets=8, n_partitions=16)
-    assert _index_signature(spark, a) == _index_signature(spark, b)
+    assert index_signature(a) == index_signature(b)
 
 
 def test_range_groups_split_terms(spark, tmp_path):

@@ -7,18 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 
-def _signature(spark, out):
-    ix = spark.read.parquet(os.path.join(out, "index"))
-    rows = ix.select(
-        "term_hash", "grp", "shard", "n",
-        F.md5("postings").alias("ph"), F.md5("positions").alias("xh"),
-    ).collect()
-    return sorted(
-        (r["term_hash"], r["grp"], r["shard"], r["n"], r["ph"], r["xh"]) for r in rows
-    )
-
-
-def test_stream_ingest_equals_oneshot(spark, tmp_path):
+def test_stream_ingest_equals_oneshot(spark, tmp_path, index_signature):
     from femto_spark.index import build_index
     from femto_spark.streaming import stream_ingest
 
@@ -58,4 +47,4 @@ def test_stream_ingest_equals_oneshot(spark, tmp_path):
     oneshot = str(tmp_path / "oneshot")
     build_index(spark, corpus, oneshot, n_buckets=8)
 
-    assert _signature(spark, streamed) == _signature(spark, oneshot)
+    assert index_signature(streamed) == index_signature(oneshot)
