@@ -9,6 +9,7 @@ Usage:
     python bench_extra.py ann       [sf_dir]   # brute_force_topk isolation
     python bench_extra.py queries   [sf_dir]   # per-query noop-sink battery
     python bench_extra.py explain <query> [sf_dir]  # .explain("formatted")
+    python bench_extra.py workers             # fixed cost of a Python task
 
 Numbers from here are cited in OPTIMIZATION_r06.md.
 """
@@ -189,6 +190,34 @@ def profile_queries(sf_dir: str) -> None:
     spark.stop()
 
 
+def profile_workers() -> None:
+    """Fixed cost of a Python-worker task: the wall time of a no-op
+    mapInPandas count against a JVM-only count of the same rows, median
+    of 3 after one untimed warm-up, at 4, 16 and 32 partitions."""
+    from statistics import median
+
+    spark = _spark()
+
+    def passthrough(batches):
+        yield from batches
+
+    def timed(fn):
+        t0 = time.time()
+        fn()
+        return time.time() - t0
+
+    for n in (4, 16, 32):
+        df = spark.range(0, 1000 * n, numPartitions=n)
+        py = df.mapInPandas(passthrough, df.schema)
+        py.count()
+        py_s = median(timed(py.count) for _ in range(3))
+        jvm_s = median(timed(df.count) for _ in range(3))
+        print({"partitions": n, "python_s": round(py_s, 3),
+               "jvm_s": round(jvm_s, 3),
+               "per_python_task_s": round((py_s - jvm_s) / n, 4)})
+    spark.stop()
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
@@ -200,5 +229,7 @@ if __name__ == "__main__":
         profile_ann(sf_dir)
     elif cmd == "queries":
         profile_queries(sf_dir)
+    elif cmd == "workers":
+        profile_workers()
     else:
         raise SystemExit(f"unknown command {cmd}")

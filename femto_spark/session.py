@@ -5,6 +5,19 @@ entrypoints share one configuration story. Designed for a multi-executor
 cluster; `local[N]` in this sandbox exercises the identical code path
 (explicit partitioning, Arrow batching, AQE) per BASELINE.md's sandbox
 protocol for the N vs 4N scaling criterion.
+
+`start_session` is the one place the Python-worker settings live; both
+`get_spark` and the spark-submit CLIs (scripts/femto_build.py,
+scripts/femto_search.py) start their sessions through it:
+
+- glibc malloc thresholds for the numpy-heavy workers (`MALLOC_ENV`);
+- `spark.python.daemon.module = femto_spark._daemon`, which stops every
+  task from re-reading pyspark.zip's directory (see that module);
+- the directory holding `femto_spark` appended to the workers' PYTHONPATH,
+  after any `spark.executorEnv.PYTHONPATH` already set, so the daemon and
+  the UDFs import the package without the caller's PYTHONPATH. In a
+  cluster the executors must be able to import the package when their
+  daemon starts (installed, or its zip on the executors' PYTHONPATH).
 """
 
 from __future__ import annotations
@@ -24,14 +37,33 @@ MALLOC_ENV = {
     "MALLOC_TRIM_THRESHOLD_": "268435456",
 }
 
+# the directory that holds the femto_spark package (or the zip it runs from)
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def start_session(builder: SparkSession.Builder) -> SparkSession:
+    """getOrCreate `builder` with the Python-worker settings (module
+    docstring). PYTHONPATH is merged into the started context's worker
+    environment, which is where a spark-defaults or `--conf` value of
+    `spark.executorEnv.PYTHONPATH` lands and what every UDF ships."""
+    for k, v in MALLOC_ENV.items():
+        os.environ.setdefault(k, v)
+        builder = builder.config(f"spark.executorEnv.{k}", v)
+    spark = builder.config(
+        "spark.python.daemon.module", "femto_spark._daemon"
+    ).getOrCreate()
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_PARENT])
+    return spark
+
 
 def get_spark(
     app_name: str = "femto_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    for k, v in MALLOC_ENV.items():
-        os.environ.setdefault(k, v)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -65,15 +97,12 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get(
                 "FEMTO_WAREHOUSE",
-                os.path.join(os.path.dirname(os.path.dirname(
-                    os.path.abspath(__file__))), ".scratch", "spark-warehouse"),
+                os.path.join(PACKAGE_PARENT, ".scratch", "spark-warehouse"),
             ),
         )
         .config("spark.eventLog.enabled", os.environ.get("FEMTO_EVENTLOG", "false"))
         .config("spark.eventLog.dir", os.environ.get("FEMTO_EVENTLOG_DIR", "/tmp"))
     )
-    for k, v in MALLOC_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{k}", v)
-    spark = builder.getOrCreate()
+    spark = start_session(builder)
     spark.sparkContext.setLogLevel("WARN")
     return spark

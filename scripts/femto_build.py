@@ -17,6 +17,10 @@ Sandbox usage (BASELINE.md two-parallelism protocol):
     spark-submit --master local[32] --py-files femto_spark.zip scripts/femto_build.py ...
 
 The master is taken from spark-submit; the script never overrides it.
+The session starts its Python workers through `femto_spark._daemon`
+(session.start_session), so the executors must import femto_spark when
+their daemon starts: YARN puts --py-files on their PYTHONPATH; elsewhere
+install the package or add `--conf spark.executorEnv.PYTHONPATH=...`.
 Emits per-stage timings + the lineage manifest summary as JSON on stdout
 (FEMTO's REPORT lines, dcx.hh:6148).
 """
@@ -46,18 +50,13 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from femto_spark.index import build_index
+    from femto_spark.session import start_session
 
-    from femto_spark.session import MALLOC_ENV
-
-    builder = SparkSession.builder
-    for _k, _v in MALLOC_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{_k}", _v)
-    spark = (
-        builder.appName("femto_build")
+    spark = start_session(
+        SparkSession.builder.appName("femto_build")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
     )
     corpus = spark.read.parquet(args.input)
     if args.lang:

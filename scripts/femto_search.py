@@ -10,6 +10,8 @@ Batch mode (femto_multiquery analogue — one Spark job for the whole file):
     ... scripts/femto_search.py --index ... --queries-file q.txt --k 10
 
 Outputs one JSON line per query: {"query": ..., "hits": [[doc_id, score], ...]}.
+Executors must import femto_spark when their Python daemon starts (see
+scripts/femto_build.py).
 """
 
 from __future__ import annotations
@@ -51,16 +53,11 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from femto_spark.query import SearchEngine
+    from femto_spark.session import start_session
 
-    from femto_spark.session import MALLOC_ENV
-
-    builder = SparkSession.builder
-    for _k, _v in MALLOC_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{_k}", _v)
-    spark = (
-        builder.appName("femto_search")
+    spark = start_session(
+        SparkSession.builder.appName("femto_search")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
     )
     corpus = spark.read.parquet(args.corpus) if args.corpus else None
     eng = SearchEngine(spark, args.index, corpus=corpus)
