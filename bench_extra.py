@@ -192,13 +192,17 @@ def profile_queries(sf_dir: str) -> None:
 
 def profile_workers() -> None:
     """Fixed cost of a Python-worker task: the wall time of a no-op
-    mapInPandas count against a JVM-only count of the same rows, median
-    of 3 after one untimed warm-up, at 4, 16 and 32 partitions."""
+    mapInPandas count against a JVM-only count of the same rows, at 4, 16
+    and 32 partitions. The no-op imports femto_spark in the worker, as
+    every femto UDF does. `first_python_s` is the first run (fresh
+    workers at 4 partitions), the rest are the median of 3 after it."""
     from statistics import median
 
     spark = _spark()
 
     def passthrough(batches):
+        import femto_spark  # noqa: F401
+
         yield from batches
 
     def timed(fn):
@@ -209,11 +213,11 @@ def profile_workers() -> None:
     for n in (4, 16, 32):
         df = spark.range(0, 1000 * n, numPartitions=n)
         py = df.mapInPandas(passthrough, df.schema)
-        py.count()
+        first_s = timed(py.count)
         py_s = median(timed(py.count) for _ in range(3))
         jvm_s = median(timed(df.count) for _ in range(3))
-        print({"partitions": n, "python_s": round(py_s, 3),
-               "jvm_s": round(jvm_s, 3),
+        print({"partitions": n, "first_python_s": round(first_s, 3),
+               "python_s": round(py_s, 3), "jvm_s": round(jvm_s, 3),
                "per_python_task_s": round((py_s - jvm_s) / n, 4)})
     spark.stop()
 

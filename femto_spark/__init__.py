@@ -21,3 +21,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from femto_spark._zipdirs import keep_zip_directories
+
+keep_zip_directories()  # Python workers: no per-task pyspark.zip re-read

@@ -11,13 +11,12 @@ protocol for the N vs 4N scaling criterion.
 scripts/femto_search.py) start their sessions through it:
 
 - glibc malloc thresholds for the numpy-heavy workers (`MALLOC_ENV`);
-- `spark.python.daemon.module = femto_spark._daemon`, which stops every
-  task from re-reading pyspark.zip's directory (see that module);
 - the directory holding `femto_spark` appended to the workers' PYTHONPATH,
-  after any `spark.executorEnv.PYTHONPATH` already set, so the daemon and
-  the UDFs import the package without the caller's PYTHONPATH. In a
-  cluster the executors must be able to import the package when their
-  daemon starts (installed, or its zip on the executors' PYTHONPATH).
+  after any `spark.executorEnv.PYTHONPATH` already set, so the UDFs import
+  the package without the caller's PYTHONPATH.
+
+Workers also stop re-reading pyspark.zip on every task once a femto UDF
+has run in them: see femto_spark/_zipdirs.py.
 """
 
 from __future__ import annotations
@@ -49,9 +48,7 @@ def start_session(builder: SparkSession.Builder) -> SparkSession:
     for k, v in MALLOC_ENV.items():
         os.environ.setdefault(k, v)
         builder = builder.config(f"spark.executorEnv.{k}", v)
-    spark = builder.config(
-        "spark.python.daemon.module", "femto_spark._daemon"
-    ).getOrCreate()
+    spark = builder.getOrCreate()
     env = spark.sparkContext.environment
     paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     if PACKAGE_PARENT not in paths:

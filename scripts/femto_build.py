@@ -17,10 +17,6 @@ Sandbox usage (BASELINE.md two-parallelism protocol):
     spark-submit --master local[32] --py-files femto_spark.zip scripts/femto_build.py ...
 
 The master is taken from spark-submit; the script never overrides it.
-The session starts its Python workers through `femto_spark._daemon`
-(session.start_session), so the executors must import femto_spark when
-their daemon starts: YARN puts --py-files on their PYTHONPATH; elsewhere
-install the package or add `--conf spark.executorEnv.PYTHONPATH=...`.
 Emits per-stage timings + the lineage manifest summary as JSON on stdout
 (FEMTO's REPORT lines, dcx.hh:6148).
 """

@@ -10,8 +10,6 @@ Batch mode (femto_multiquery analogue — one Spark job for the whole file):
     ... scripts/femto_search.py --index ... --queries-file q.txt --k 10
 
 Outputs one JSON line per query: {"query": ..., "hits": [[doc_id, score], ...]}.
-Executors must import femto_spark when their Python daemon starts (see
-scripts/femto_build.py).
 """
 
 from __future__ import annotations

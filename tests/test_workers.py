@@ -1,6 +1,6 @@
-"""The Python-worker boundary: the daemon module's zip-directory wrapper,
-error propagation through the daemon, and workers that import
-femto_spark without the caller's PYTHONPATH."""
+"""The Python-worker boundary: the zip-directory wrapper that importing
+femto_spark installs, error propagation out of a worker, and workers that
+import femto_spark without the caller's PYTHONPATH."""
 
 import importlib
 import os
@@ -21,7 +21,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_zip_directory_reread_only_on_change(tmp_path, monkeypatch):
     import zipimport
 
-    from femto_spark import _daemon
+    import femto_spark  # noqa: F401  (installs the wrapper)
 
     zpath = str(tmp_path / "mods.zip")
 
@@ -35,10 +35,7 @@ def test_zip_directory_reread_only_on_change(tmp_path, monkeypatch):
     monkeypatch.setattr(sys, "path_importer_cache", dict(sys.path_importer_cache))
     for name in ("femto_zip_a", "femto_zip_b"):
         monkeypatch.delitem(sys.modules, name, raising=False)
-    monkeypatch.setattr(
-        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
-    )
-    _daemon.keep_zip_directories()
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "femto_spark._zipdirs"
     assert importlib.import_module("femto_zip_a").X == 1
 
     reads = []
